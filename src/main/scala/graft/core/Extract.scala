@@ -115,30 +115,35 @@ object Extract {
   }
 
   // JS /\s/ exactly (extract.ts:207-209 splits on /\s+/): Java's \s is
-  // ASCII-only, JS's additionally matches the Unicode space set below —
-  // &nbsp;-separated words must count as the reference counts them
-  private val JsWhitespace =
-    "[\\s\\u00A0\\u1680\\u2000-\\u200A\\u2028\\u2029\\u202F\\u205F\\u3000\\uFEFF]+"
-  // precompiled: countWords runs once per page in every extract call (incl.
-  // the extract scaling bench kernel) — String.split compiled this class on
-  // each call
-  private val JsWhitespaceRe = java.util.regex.Pattern.compile(JsWhitespace)
+  // ASCII-only, JS's additionally matches the Unicode space set. One table
+  // of inclusive BMP ranges; the regex class and the per-char test below
+  // are both derived from it, so &nbsp;-separated words count as the
+  // reference counts them.
+  private val JsWhitespaceRanges: Seq[(Int, Int)] = Seq(
+    0x0009 -> 0x000D, // \t \n VT \f \r (Java \s minus space)
+    0x0020 -> 0x0020, 0x00A0 -> 0x00A0, 0x1680 -> 0x1680,
+    0x2000 -> 0x200A, 0x2028 -> 0x2029, 0x202F -> 0x202F,
+    0x205F -> 0x205F, 0x3000 -> 0x3000, 0xFEFF -> 0xFEFF)
+
+  // precompiled: the collapse runs once per page in every extract call
+  private[core] val JsWhitespaceRe = java.util.regex.Pattern.compile(
+    JsWhitespaceRanges.map { case (lo, hi) => f"\\u$lo%04X-\\u$hi%04X" }
+      .mkString("[", "", "]+"))
   private val SentenceRe = java.util.regex.Pattern.compile("[.!?]+")
 
-  // Exact member test for the class above (all BMP, no surrogates): Java \s
-  // is space, \t, \n, vertical tab (0x0B), \f, \r; the rest is the listed
-  // JS Unicode space set.
-  private def isJsWs(c: Char): Boolean = {
-    val x = c.toInt
-    x == 0x20 || x == 0x09 || x == 0x0A || x == 0x0B || x == 0x0C ||
-      x == 0x0D || x == 0x00A0 || x == 0x1680 ||
-      (x >= 0x2000 && x <= 0x200A) || x == 0x2028 || x == 0x2029 ||
-      x == 0x202F || x == 0x205F || x == 0x3000 || x == 0xFEFF
+  // member bitset over the BMP: one array load per char on the hot path
+  private val JsWhitespaceBits: Array[Long] = {
+    val bits = new Array[Long](1024)
+    for ((lo, hi) <- JsWhitespaceRanges; x <- lo to hi) bits(x >>> 6) |= 1L << x
+    bits
   }
+
+  private[core] def isJsWs(c: Char): Boolean =
+    ((JsWhitespaceBits(c >>> 6) >>> c) & 1L) != 0
 
   // split(class+) + count(nonEmpty) ≡ number of maximal non-class runs —
   // counted with one scan, no token-array allocation (this runs once per
-  // page in every extract call, including the extract scaling bench kernel)
+  // page in every extract call)
   def countWords(text: String): Int = {
     var count = 0
     var inWord = false
@@ -202,7 +207,7 @@ object Extract {
       .foreach(_.remove())
     val bodyText = doc.body.text()
     val t = if (bodyText.isEmpty) doc.root.text() else bodyText
-    // JS /\s+/g is the Unicode class (JsWhitespace), not Java's ASCII \s;
+    // JS /\s+/g is the Unicode class (JsWhitespaceRe), not Java's ASCII \s;
     // after the collapse every run is a single ASCII space, so Java trim
     // ≡ JS trim on the result
     if (collapseWs) JsWhitespaceRe.matcher(t).replaceAll(" ").trim else t

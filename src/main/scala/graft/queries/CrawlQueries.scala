@@ -76,7 +76,7 @@ object CrawlQueries {
         // HARD assert, not just a parity-checked column: both Spark and the
         // oracle would compute within_budget=false identically, so the
         // driver's hash compare alone could never catch a budget regression
-        // — a violation must throw and fail the Verify/Bench gate outright
+        // — a violation must throw and fail the query outright
         val over = agg.filter(not(col("within_budget"))).count()
         require(over == 0, s"q31: $over (round,host) groups exceed hostBudget=5")
         agg.orderBy(col("round"), col("host"))

@@ -88,7 +88,7 @@ object DedupQueries {
   /** LSH candidate pairs (band-bucket collisions, pre-confirm): the stage
     * whose cardinality decides whether the dedup scales — it must grow
     * ~linearly in docs, never all-pairs. Factored out of [[minhashPairs]]
-    * so the bench can count it directly (`dedup_scale` block). */
+    * so the benchmark can count it directly (`perfbench`, `dedup_skewed`). */
   def minhashCandidates(d: DataFrame, k: Int = MinhashK, bands: Int = Bands)
       : DataFrame = {
     val spark = d.sparkSession
@@ -159,7 +159,7 @@ object DedupQueries {
   }
 
   /** Exact-Jaccard confirm over an LSH candidate pair set (the second
-    * stage of [[minhashPairs]], separable so the bench can time and count
+    * stage of [[minhashPairs]], separable so the benchmark can time and count
     * the stages independently without recomputing signatures). */
   def confirmJaccard(d: DataFrame, cand: DataFrame): DataFrame = {
     val sets = d.select(col("doc_id"), array_distinct(col("toks")).as("set"))

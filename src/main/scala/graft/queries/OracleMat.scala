@@ -23,12 +23,11 @@ object OracleMat {
   val Root = "/tmp/graft_kernel"
 
   /** Where THIS process writes. Only the Verify main may write the default
-    * Root (the path the static oracle SQL reads); Bench and the test
-    * suites run the same queries at OTHER scale factors and must not
-    * clobber the Verify dump between the driver's Verify and DuckDB-check
-    * steps — they redirect via -Dgraft.kernel.root / GRAFT_KERNEL_ROOT. */
-  def writeRoot: String = sys.props.getOrElse("graft.kernel.root",
-    sys.env.getOrElse("GRAFT_KERNEL_ROOT", Root))
+    * Root (the path the static oracle SQL reads); the benchmark and the
+    * test suites run the same queries at OTHER scale factors and must not
+    * clobber the Verify dump between the Verify and DuckDB-check steps —
+    * they redirect via -Dgraft.kernel.root. */
+  def writeRoot: String = sys.props.getOrElse("graft.kernel.root", Root)
 
   /** Write `df` to the query's materialization path and hand back the
     * re-read relation (so downstream plans scan parquet, same as the

@@ -128,6 +128,14 @@ class ExtractSpec extends AnyFunSuite {
     assert(Extract.countWords("") == 0)
   }
 
+  test("isJsWs agrees with the JS whitespace regex class on every BMP char") {
+    val disagree = (0 to 0xFFFF).map(_.toChar).filter { c =>
+      Extract.isJsWs(c) != Extract.JsWhitespaceRe.matcher(c.toString).matches()
+    }
+    assert(disagree.isEmpty, disagree.take(8).map(c => f"U+${c.toInt}%04X"))
+    assert((0 to 0xFFFF).count(x => Extract.isJsWs(x.toChar)) == 25)
+  }
+
   test("determinism: same input -> byte-identical output") {
     val html = body("<h1>T</h1><main><p>" + ("deterministic " * 20) + "</p></main>")
     val a = Extract.extract(html, "http://a.com/", Clock)

@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Star-edge LSH candidates ([[DedupQueries.minhashCandidatesStar]]): the
   * skew-immune variant for cluster dedup over boilerplate-heavy corpora.
-  * Pins the two claims the corpus-pipeline bench rests on:
+  * Pins the two claims the corpus-pipeline dedup rests on:
   *   1. connected components over star edges == components over the
   *      pairwise candidate graph (cluster semantics preserved);
   *   2. candidate cardinality is O(bucket), not O(bucket²) — a bucket of
