@@ -158,36 +158,78 @@ object DedupQueries {
       .dropDuplicates("doc_a", "doc_b")
   }
 
-  /** Exact-Jaccard confirm over an LSH candidate pair set (the second
-    * stage of [[minhashPairs]], separable so the benchmark can time and count
-    * the stages independently without recomputing signatures). */
-  def confirmJaccard(d: DataFrame, cand: DataFrame): DataFrame = {
-    val sets = d.select(col("doc_id"), array_distinct(col("toks")).as("set"))
+  /** Per-doc word sets (doc_id, set) — the Jaccard operand over word sets
+    * (src/server.ts:24-39). */
+  private def wordSets(d: DataFrame): DataFrame =
+    d.select(col("doc_id"), array_distinct(col("toks")).as("set"))
+
+  /** The exact-Jaccard confirm kernel: joins each candidate pair's two word
+    * sets from `sets` (doc_id, set) and keeps pairs with jaccard ≥ 0.8.
+    * Returns (doc_a, doc_b, inter, union_). */
+  private def jaccardJoin(cand: DataFrame, sets: DataFrame): DataFrame =
     cand
       .join(sets.select(col("doc_id").as("doc_a"), col("set").as("set_a")), Seq("doc_a"))
       .join(sets.select(col("doc_id").as("doc_b"), col("set").as("set_b")), Seq("doc_b"))
       .withColumn("inter", size(array_intersect(col("set_a"), col("set_b"))))
       .withColumn("union_", size(col("set_a")) + size(col("set_b")) - col("inter"))
-      .filter(col("inter") * 10 >= col("union_") * 8)
-      .select(col("doc_a"), col("doc_b"))
+      .filter(col("inter") * 10 >= col("union_") * 8) // jaccard >= 0.8
+      .select(col("doc_a"), col("doc_b"), col("inter"), col("union_"))
+
+  /** Exact-Jaccard confirm over an LSH candidate pair set (the second
+    * stage of [[minhashPairs]], separable so the benchmark can time and count
+    * the stages independently without recomputing signatures). */
+  def confirmJaccard(d: DataFrame, cand: DataFrame): DataFrame =
+    jaccardJoin(cand, wordSets(d)).select(col("doc_a"), col("doc_b"))
+
+  /** Star-edge count up to which [[ccLabels]] finishes in one task's
+    * [[MinUnionFind]]: a star graph has at most one id per edge, so that
+    * task holds at most ~80 MiB. Above it the label loop runs. */
+  val CcSmallEdgesMax = 2000000L
+
+  /** Union-find over (a, b) edges whose root is the minimum id of its set;
+    * emits (id, root) once for every id it saw, a self-loop's id included. */
+  private def minRootStars(edges: Iterator[(Long, Long)]): Iterator[(Long, Long)] = {
+    val uf = new MinUnionFind
+    edges.foreach { case (a, b) => uf.union(a, b) }
+    uf.labels
   }
 
-  /** Connected components over an undirected pair graph via iterative
+  /** Connected components over an undirected pair graph. Returns (node,
+    * label = min doc_id of the component) for every node of `pairs`.
+    *
+    * Contract: one narrow pass runs [[minRootStars]] in each partition of
+    * the pair frame and replaces its edges by star edges (node, local min).
+    * That is one job with no shuffle, and its count sizes the finish. The
+    * star graph has the pair graph's nodes and components, and at most
+    * (nodes seen per partition) edges.
+    *
+    * Finish: up to `smallEdgesMax` star edges, one task's union-find over
+    * them yields the labels. Above that, [[labelLoop]] runs on the star
+    * graph, so no task's work grows super-linearly in its input. The
+    * loop costs ~10 jobs a round, so a 46k-edge, 3.2k-node graph takes 23
+    * jobs through it and one job (before the caller's action) through the
+    * single-task finish. Only tests set `smallEdgesMax`, to force the loop. */
+  def ccLabels(s: SparkSession, pairs: DataFrame,
+      smallEdgesMax: Long = CcSmallEdgesMax): DataFrame = {
+    import s.implicits._
+    val stars = pairs.select(col("doc_a").cast("long"), col("doc_b").cast("long"))
+      .as[(Long, Long)].rdd.mapPartitions(minRootStars).localCheckpoint()
+    if (stars.count() <= smallEdgesMax)
+      stars.coalesce(1).mapPartitions(minRootStars).toDF("node", "label")
+    else labelLoop(stars.toDF("u", "v"))
+  }
+
+  /** Connected components over an edge frame (u, v) via iterative
     * min-label propagation WITH pointer halving: each round combines a
     * one-hop propagation (label flows along edges) with label ←
     * label(label) shortcutting, so convergence is O(log diameter) rounds —
     * one-hop-only propagation is Θ(diameter), which the r9 corpus-pipeline
     * graph (hub-chained star edges over a boilerplate corpus) turned into
-    * 50+ rounds / ~5 minutes at 176k nodes. Joins touch only the pair
-    * graph, whose edge list is materialized ONCE up front (the input plan
-    * may be an arbitrarily expensive LSH/confirm chain; without the cut,
-    * every round recomputed it — the other half of those 5 minutes).
-    * Lineage is cut per round. Returns (node, label = min doc_id of the
-    * component). */
-  def ccLabels(s: SparkSession, pairs: DataFrame): DataFrame = {
-    val und = pairs.select(col("doc_a").as("u"), col("doc_b").as("v"))
-      .unionByName(pairs.select(col("doc_b").as("u"), col("doc_a").as("v")))
-      .localCheckpoint(true)
+    * 50+ rounds / ~5 minutes at 176k nodes. `edges` must be a materialized
+    * leaf: every round rejoins it. Lineage is cut per round; each round
+    * costs ~10 jobs under AQE. Returns (node, label). */
+  private def labelLoop(edges: DataFrame): DataFrame = {
+    val und = edges.unionByName(edges.select(col("v").as("u"), col("u").as("v")))
     // NOTE: the crawl engine's small-data conf scoping was tried here too
     // (AQE off + small shuffle fans for the loop) and measured NEUTRAL to
     // slightly negative — the loop's frames are checkpointed leaves with no
@@ -233,16 +275,8 @@ object DedupQueries {
         val cand = OracleMat(s, "q20_cand")(minhashCandidates(d))
         // exact Jaccard confirmation over word sets (src/server.ts:24-39):
         // rejoin the (deduped) token sets only for surviving candidates
-        val sets = OracleMat(s, "q20_sets")(
-          d.select(col("doc_id"), array_distinct(col("toks")).as("set")))
-        cand
-          .join(sets.select(col("doc_id").as("doc_a"), col("set").as("set_a")), Seq("doc_a"))
-          .join(sets.select(col("doc_id").as("doc_b"), col("set").as("set_b")), Seq("doc_b"))
-          .withColumn("inter", size(array_intersect(col("set_a"), col("set_b"))))
-          .withColumn("union_", size(col("set_a")) + size(col("set_b")) - col("inter"))
-          .filter(col("inter") * 10 >= col("union_") * 8) // jaccard >= 0.8
-          .select(col("doc_a"), col("doc_b"), col("inter"), col("union_"))
-          .orderBy(col("doc_a"), col("doc_b"))
+        val sets = OracleMat(s, "q20_sets")(wordSets(d))
+        jaccardJoin(cand, sets).orderBy(col("doc_a"), col("doc_b"))
       },
       Some(s"""WITH cand AS (SELECT doc_a, doc_b FROM ${OracleMat.src("q20_cand")}),
               |sets AS (SELECT doc_id, "set" AS ws FROM ${OracleMat.src("q20_sets")}),
@@ -318,11 +352,12 @@ object DedupQueries {
     //     — the canonical "keep one doc per duplicate cluster" step of a
     //     100 TB training-data pipeline. Pairs come from the same
     //     MinHash-LSH + exact-Jaccard-confirm kernel as q20; components via
-    //     iterative min-label propagation (label joins only touch the pair
-    //     graph, never the corpus; O(log diameter) rounds, lineage cut per
-    //     round). Oracle: DuckDB computes the transitive closure with a
-    //     recursive CTE over the materialized pairs — independent CC
-    //     verification. ----------------------------------------------------
+    //     [[ccLabels]]: a per-partition union-find contracts the pair
+    //     graph to star edges, then one task's union-find labels them
+    //     (above a size threshold, min-label propagation runs on the star
+    //     graph); the corpus is never touched. Oracle: DuckDB computes the
+    //     transitive closure with a recursive CTE over the materialized
+    //     pairs — independent CC verification. -----------------------------
     QuerySpec(
       "q82_dup_clusters",
       (s, dir) => {
