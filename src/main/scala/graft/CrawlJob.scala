@@ -49,7 +49,6 @@ object CrawlJob {
       respectRobots = true,
       saltBuckets = a.getOrElse("salt-buckets", "8").toInt,
       web = web,
-      bloomPrefilter = a.getOrElse("bloom-prefilter", "false").toBoolean,
       // membership mode: --exact-seen-index forces the resident O(delta)
       // index from round 0; otherwise the crawl AUTO-switches to it once
       // the seen set crosses --auto-seen-index-at URLs (the measured

@@ -8,16 +8,17 @@ import graft.core.{Extract, Robots, UrlNorm}
 /** The distributed crawl-frontier engine (SURVEY.md §7 module 6; north rule).
   *
   * One scheduling round is a typed Dataset pipeline:
-  *   frontier → dedupe(min seq per url) → anti-join(seen) → per-host
+  *   frontier → dedupe(min seq per url) → drop seen urls → per-host
   *   rank/budget window → global FIFO order index → repartition(host,salt)
   *   → mapPartitions(robots gate + synthetic fetch + extract kernel)
-  *   → pages/fetch_log deltas + next frontier + seen delta
+  *   → fetch_log delta + next frontier
   *
   * Scale design (10^10-URL frontier):
-  *  - membership is on the 64-bit xxh64 of the canonical URL; the exact
-  *    anti-join shuffles only (hash, url) pairs. A per-partition Bloom
-  *    prefilter ([[SeenFilter]]) can drop the bulk of dups before the
-  *    shuffle; positives are always confirmed exactly, so no false drops.
+  *  - the fetch log is the one record of the seen set: a URL is seen iff
+  *    its 64-bit xxh64 hash is in `fetched`. Membership is tested exactly,
+  *    either by an anti-join against `fetched.url_hash` or by probing the
+  *    resident [[SeenIndex]], which is maintained from each round's fetch
+  *    delta.
   *  - the politeness budget is enforced BEFORE the salted repartition by a
   *    window over the host key (rank ≤ B), so a mega-host never serializes
   *    a partition: its per-round work is bounded by B and spread over
@@ -25,8 +26,9 @@ import graft.core.{Extract, Robots, UrlNorm}
   *  - the global BFS order index is computed without a single-partition
   *    window: range-partition by the FIFO key, count rows per partition,
   *    broadcast the prefix offsets, add the local rank (two narrow passes).
-  *  - every round commits deltas + per-partition lineage to a
-  *    [[SnapshotStore]]; `resume` restarts from the latest manifest.
+  *  - every round commits its fetch_log delta, the next frontier and
+  *    per-partition lineage to a [[SnapshotStore]]; `resume` restarts from
+  *    the latest manifest.
   */
 object FrontierEngine {
 
@@ -63,13 +65,6 @@ object FrontierEngine {
         * work next round. 0 (BFS mode) keeps next_fetch_time untouched —
         * the reference-exactness oracles pin that ordering. */
       deferSeconds: Long = 0L,
-      /** route the seen-membership test through the distributed Bloom
-        * prefilter ([[SeenFilter]], sized from the live seen count) before
-        * the exact anti-join. Semantics are identical by construction (no
-        * false negatives; every possibly-seen row is exactly confirmed) —
-        * at 10^10 URLs the prefilter drops the bulk of duplicate
-        * candidates before they reach the anti-join shuffle. */
-      bloomPrefilter: Boolean = false,
       /** keep the seen set RESIDENT in a bucket-co-partitioned exact index
         * ([[SeenIndex]]): per round only the DELTA shuffles (new hashes
         * merged as one sorted run per bucket) and membership is a
@@ -77,9 +72,7 @@ object FrontierEngine {
         * anti-join's O(seen) full-table shuffle, the dominant recurring
         * cost of a long crawl. Results are byte-identical (identity is the
         * 64-bit hash either way; CrawlSpec pins order/seen-set/text
-        * equality vs the scalar oracle with the index on). Takes
-        * precedence over bloomPrefilter (the index IS exact — nothing to
-        * prefilter). */
+        * equality vs the scalar oracle with the index on). */
       exactSeenIndex: Boolean = false,
       /** AUTO mode selection for seen membership: when ≥ 0 and
         * `exactSeenIndex` is off, the crawl starts on the plain anti-join
@@ -98,11 +91,11 @@ object FrontierEngine {
   final case class RoundResult(
       fetched: DataFrame, // FetchedRow sans links
       newFrontier: Dataset[FrontierRow],
-      seenDelta: DataFrame, // (url_hash, url)
       taken: Long,
-      /** release the round's transient caches — call AFTER newFrontier and
-        * seenDelta have been materialized (checkpoint/commit); the fetched
-        * cache is NOT released here (later rounds union it). */
+      /** release the round's transient caches — call AFTER newFrontier has
+        * been materialized (checkpoint/commit); the fetched cache is NOT
+        * released here (later rounds union it, and the seen index reads
+        * the round's hashes from it). */
       cleanup: () => Unit = () => ())
 
   def seedFrontier(spark: SparkSession, seeds: Seq[String]): Dataset[FrontierRow] = {
@@ -112,12 +105,13 @@ object FrontierEngine {
     }.toDS()
   }
 
-  /** One scheduling round. `seen` is (url_hash LONG, url STRING);
-    * `fetchedSoFar` drives the global maxPages cap. When
-    * `cfg.exactSeenIndex` is set, `seenIdx` supplies the resident index
-    * and `seen` is not read at all this round. */
+  /** One scheduling round. `fetched` is every page fetched so far (the
+    * fetch log); a frontier URL is seen iff its `url_hash` is in it, and
+    * its row count is `fetchedSoFar`, which also drives the global maxPages
+    * cap. When `seenIdx` is given, membership probes that resident index
+    * and `fetched` is not read at all this round. */
   def round(spark: SparkSession, frontier: Dataset[FrontierRow],
-      seen: DataFrame, roundNo: Int, fetchedSoFar: Long,
+      fetched: DataFrame, roundNo: Int, fetchedSoFar: Long,
       cfg: Config, seenIdx: Option[SeenIndex] = None,
       frontierEst: Long = -1L): RoundResult = {
     import spark.implicits._
@@ -125,7 +119,7 @@ object FrontierEngine {
     // 1. within-frontier dedupe: first discovery (min FIFO seq) wins.
     //    Grouped on url_hash ALONE (url/host ride the min-struct): identity
     //    is the 64-bit hash everywhere in this engine (the seen set, the
-    //    Bloom filter), and single-key grouping leaves the frame
+    //    seen index), and single-key grouping leaves the frame
     //    hash-partitioned on exactly the anti-join key, so step 2 reuses
     //    this exchange instead of reshuffling the whole frontier.
     val deduped = frontier
@@ -142,36 +136,25 @@ object FrontierEngine {
         col("seq.priority").as("priority"),
         col("seq.next_fetch_time").as("next_fetch_time"))
 
-    // 2. seen-membership: exact anti-join on the 64-bit hash; with
-    //    bloomPrefilter the bucket-co-partitioned Bloom drops definite-fresh
-    //    rows first and only possibly-seen rows pay the anti-join shuffle
-    //    (positives are always exactly confirmed — no false drops)
+    // 2. seen-membership: exact, on the 64-bit hash
     val fresh = seenIdx match {
       case Some(idx) =>
         // resident exact index: only the candidate side moves. Presence-
         // driven: [[crawl]] decides the mode (config flag or auto-switch
         // at the measured crossover) by passing the index or not.
         SeenIndex.split(spark, deduped, idx)._1
-      case _ =>
-        if (cfg.bloomPrefilter && fetchedSoFar > 0) {
-          val p = SeenFilter.Params.forCount(math.max(fetchedSoFar, 1L))
-          val filters = SeenFilter.build(spark, seen, p)
-          val (definiteFresh, maybeSeen) = SeenFilter.split(spark, deduped, filters, p)
-          definiteFresh.union(
-            maybeSeen.join(seen.select("url_hash"), Seq("url_hash"), "left_anti"))
-        } else {
-          // the seen side's row count IS fetchedSoFar (one row per fetched
-          // page). While it fits a broadcast (~16 MB of hashes at 2M), hint
-          // it explicitly: the storeless seen is a checkpointed leaf with
-          // no stats, so the static planner (and the small-round mode with
-          // AQE off) would otherwise pick a sort-merge anti join for a
-          // few-hundred-row table (guide §3.1: pick the strategy
-          // deliberately). Past the threshold the planner decides; the
-          // auto seen-index takes over at 16M anyway.
-          val seenKeys = seen.select("url_hash")
-          val rhs = if (fetchedSoFar <= 2000000L) broadcast(seenKeys) else seenKeys
-          deduped.join(rhs, Seq("url_hash"), "left_anti")
-        }
+      case None =>
+        // anti-join against the fetch log's hashes (the scan reads only
+        // that column). While the fetchedSoFar hashes fit a broadcast
+        // (~16 MB at 2M), hint it explicitly: a storeless fetch log is a
+        // union of cached and checkpointed leaves with no stats, so the
+        // static planner (and the small-round mode with AQE off) would
+        // otherwise pick a sort-merge anti join for a few-hundred-row table
+        // (guide §3.1: pick the strategy deliberately). Past the threshold
+        // the planner decides; the auto seen-index takes over at 16M anyway.
+        val seenKeys = fetched.select("url_hash")
+        val rhs = if (fetchedSoFar <= 2000000L) broadcast(seenKeys) else seenKeys
+        deduped.join(rhs, Seq("url_hash"), "left_anti")
     }
 
     // 3. per-host politeness budget: rank by (priority, next_fetch_time)
@@ -211,7 +194,7 @@ object FrontierEngine {
     val sameHostOnly = cfg.sameHostOnly
     val maxDepth = cfg.maxDepth
     val rNo = roundNo
-    val fetched: Dataset[FetchedRow] = taken
+    val fetchedNow: Dataset[FetchedRow] = taken
       .repartition(col("host"), pmod(col("url_hash"), lit(cfg.saltBuckets)))
       .select(col("url"), col("url_hash"), col("host"), col("depth"),
         col("parent_order"), col("link_pos"), col("order_idx"))
@@ -245,15 +228,14 @@ object FrontierEngine {
         }
       }
 
-    val fetchedCached = fetched.cache()
+    val fetchedCached = fetchedNow.cache()
     // taken row count is already known from the FIFO-index partition counts
     // (min(total, room)) — a count() action here would be one more full
     // Spark job per round; materialization of the cached fetch happens on
-    // the first real consumer (children / seen-delta checkpoint / commit)
+    // the first real consumer (the next frontier's checkpoint or commit)
     val takenCount = math.min(indexedTotal, math.max(0L, room))
 
-    // 6. children → next frontier (anti-join vs seen happens next round;
-    //    we pre-filter against this round's seen delta for compactness)
+    // 6. children → next frontier (membership is tested next round)
     val children = fetchedCached
       // depth rides the exploded row directly — the former self-join of
       // fetchedCached with itself on parent_order re-derived a value that
@@ -274,12 +256,9 @@ object FrontierEngine {
       .withColumn("next_fetch_time", lit(0L))
       .select(frontierCols: _*).as[FrontierRow]
 
-    val seenDelta = fetchedCached.select(col("url_hash"), col("url"))
-
     RoundResult(
       fetched = fetchedCached.drop("links"),
       newFrontier = deferredByBudget.union(overflow).union(children),
-      seenDelta = seenDelta,
       taken = takenCount,
       cleanup = () => { ranked.unpersist(false); () })
   }
@@ -288,7 +267,7 @@ object FrontierEngine {
   private val planCollapseEvery = 8
 
   /** Per-round seen-membership mode decisions of the most recent [[crawl]]
-    * ((round, "anti"|"bloom"|"index"|"switch_to_index@N")) — diagnostic,
+    * ((round, "anti"|"index"|"switch_to_index@N")) — diagnostic,
     * CrawlSpec asserts the auto-switch fires at its threshold. */
   @volatile var lastSeenModeLog: List[(Int, String)] = Nil
 
@@ -365,13 +344,13 @@ object FrontierEngine {
     (out.toDF(), counts.map(_._2).sum)
   }
 
-  /** Drive a full crawl from seeds; returns (all fetched rows, final seen).
-    * When `store` is given, every round commits deltas + lineage and the
-    * crawl can resume from the latest snapshot. */
+  /** Drive a full crawl from seeds; returns (all fetched rows, final seen
+    * set as (url_hash, url) — a projection of the fetched rows). When
+    * `store` is given, every round commits deltas + lineage and the crawl
+    * can resume from the latest snapshot. */
   def crawl(spark: SparkSession, seeds: Seq[String], cfg: Config,
       store: Option[SnapshotStore] = None): (DataFrame, DataFrame) = {
     import spark.implicits._
-    val emptySeen = Seq.empty[(Long, String)].toDF("url_hash", "url")
     // frontier row-count estimate for scale-adaptive range partitioning
     // (only order-of-magnitude accuracy is needed; see
     // withGlobalFifoIndexCounted). Seeded exactly, then advanced per round
@@ -384,7 +363,7 @@ object FrontierEngine {
         s
       case None =>
         frontierEst = seeds.size.toLong
-        CrawlState(seedFrontier(spark, seeds).toDF(), emptySeen, emptyFetched(spark), 0, 0L)
+        CrawlState(seedFrontier(spark, seeds).toDF(), emptyFetched(spark), 0, 0L)
     }
     // resident exact seen index. With a store, the durable sidecar
     // ([[SeenIndexStore]]) is preferred: load is a zero-shuffle per-bucket
@@ -394,13 +373,14 @@ object FrontierEngine {
     def buildIndex(st8: CrawlState): SeenIndex = {
       val bucketsIfNew =
         SeenIndex.bucketsFor(spark, math.max(st8.fetchedCount, cfg.maxPages))
-      // full rebuild from the committed seen table, wiping the sidecar
+      val seenHashes = st8.fetched.select("url_hash")
+      // full rebuild from the committed fetch log, wiping the sidecar
       // first: once we're here the dir's files are either absent or
       // untrustworthy (foreign/rolled-back timeline), and writeRun's
       // exists-skip must not keep any of them over the rebuild's writes
       def rebuild(st: SnapshotStore): SeenIndex = {
         SeenIndexStore.wipe(st.indexDir)
-        val idx = SeenIndex.fromSeen(spark, st8.seen, bucketsIfNew,
+        val idx = SeenIndex.fromSeen(spark, seenHashes, bucketsIfNew,
           Some(SeenIndexStore.Sink(st.indexDir, st8.round)))
         SeenIndexStore.writeManifest(st.indexDir, idx.buckets, st8.round)
         idx
@@ -417,11 +397,12 @@ object FrontierEngine {
               SeenIndexStore.invalidateAhead(st.indexDir, st8.round)
               var idx = idx0
               ((idxRound + 1) to st8.round).foreach { k =>
-                st.seenDeltaPath(k).foreach { p =>
+                st.fetchLogPath(k).foreach { p =>
                   // idempotent add: after snapshot expiry the compacted
                   // keepRound delta holds the union of expired rounds —
-                  // already-resident hashes are dropped bucket-locally
-                  idx = SeenIndex.add(idx, spark.read.parquet(p),
+                  // already-resident hashes are dropped bucket-locally.
+                  // Only url_hash is selected, so parquet skips the text.
+                  idx = SeenIndex.add(idx, spark.read.parquet(p).select("url_hash"),
                     Some(SeenIndexStore.Sink(st.indexDir, k)))
                 }
               }
@@ -430,24 +411,23 @@ object FrontierEngine {
                 SeenIndexStore.gc(st.indexDir, st8.round)
               }
               // integrity cross-check (idx.count is maintained exactly;
-              // the seen side is one count job — valid because seen is
-              // unique BY HASH by construction: membership is tested on
-              // url_hash, so a colliding url is classified seen and never
-              // appended, and plain count == distinct-hash count at any
-              // scale): a missing or truncated
+              // the fetch log side is one count job — valid because the
+              // fetch log is unique BY HASH by construction: membership is
+              // tested on url_hash, so a colliding url is classified seen
+              // and never fetched, and plain count == distinct-hash count
+              // at any scale): a missing or truncated
               // run file SHRINKS membership silently instead of failing —
               // on mismatch, fall back to the fromSeen rebuild. A false
               // positive only costs the rebuild; a false negative would
               // re-fetch/re-emit pages, so the check is deliberately
               // conservative
-              val seenCount = st8.seen.count()
-              if (idx.count != seenCount) {
+              if (idx.count != st8.fetched.count()) {
                 idx.release()
                 rebuild(st)
               } else idx
             case None => rebuild(st)
           }
-        case None => SeenIndex.fromSeen(spark, st8.seen, bucketsIfNew)
+        case None => SeenIndex.fromSeen(spark, seenHashes, bucketsIfNew)
       }
     }
     val modeLog = scala.collection.mutable.ArrayBuffer[(Int, String)]()
@@ -492,13 +472,11 @@ object FrontierEngine {
         seenIdx = Some(buildIndex(state))
         modeLog += ((state.round, s"switch_to_index@${state.fetchedCount}"))
       }
-      modeLog += ((state.round,
-        if (seenIdx.isDefined) "index"
-        else if (cfg.bloomPrefilter) "bloom" else "anti"))
+      modeLog += ((state.round, if (seenIdx.isDefined) "index" else "anti"))
       // no isEmpty pre-check: an empty frontier yields taken == 0 in the
       // round itself — the pre-check was one extra Spark job per round
       val fr = state.frontier.as[FrontierRow]
-      val r = round(spark, fr, state.seen, state.round, state.fetchedCount, cfg,
+      val r = round(spark, fr, state.fetched, state.round, state.fetchedCount, cfg,
         seenIdx, frontierEst)
       try if (r.taken == 0) continue = false
       else {
@@ -506,52 +484,47 @@ object FrontierEngine {
         // lineage cut rides on that materialization — without a cut each
         // round's DAG embeds all previous rounds and the driver OOMs on
         // plan strings alone. With a store, the snapshot COMMIT is the
-        // materialization: frontier + seen delta are written to committed
-        // parquet and read back as the next state's leaves (r1-r8
-        // additionally localCheckpoint-ed the same rows first, writing
-        // every frontier byte twice per round — half the commit overhead
-        // the r8 interleaved A/B measured). Without a store,
-        // localCheckpoint is the cut. Either way the seen set is NEVER
-        // rewritten per round: only the O(delta) round delta is
-        // materialized and unioned in — at 10^10 URLs a per-round full
-        // rewrite of the seen table would dominate every round's cost.
-        // `fetched` deltas are already cached with flat lineage.
-        val (frontierNext, seenDeltaCk) = store match {
+        // materialization: the frontier is written to committed parquet
+        // and read back, with its known schema, as the next state's leaf
+        // (r1-r8 additionally localCheckpoint-ed the same rows first,
+        // writing every frontier byte twice per round — half the commit
+        // overhead the r8 interleaved A/B measured). Without a store,
+        // localCheckpoint is the cut. The fetch log, which is also the
+        // seen set, is NEVER rewritten per round: the round's delta is
+        // already cached with flat lineage and is unioned in — at 10^10
+        // URLs a per-round full rewrite would dominate every round's cost.
+        val frontierNext = store match {
           case Some(st) =>
             val pending = CrawlState(
               frontier = r.newFrontier.toDF(),
-              seen = state.seen, // commit reads only frontier/round/count
-              fetched = state.fetched,
+              fetched = state.fetched, // commit reads only frontier/round/count
               round = state.round + 1,
               fetchedCount = state.fetchedCount + r.taken)
             st.commit(spark, pending, r)
-            (spark.read.parquet(st.frontierPath(pending.round)),
-              spark.read.parquet(st.seenDeltaPath(pending.round).get))
-          case None =>
-            (r.newFrontier.toDF().localCheckpoint(true),
-              r.seenDelta.localCheckpoint(true))
+            st.readFrontier(spark, pending.round)
+          case None => r.newFrontier.toDF().localCheckpoint(true)
         }
         var newState = CrawlState(
           frontier = frontierNext,
-          seen = state.seen.union(seenDeltaCk),
           fetched = state.fetched.union(r.fetched),
           round = state.round + 1,
           fetchedCount = state.fetchedCount + r.taken)
-        // O(delta) index maintenance (invalidates the previous index).
-        // With a store, the round's run events persist into the sidecar
-        // DURING the add's materialization, and the index manifest
-        // advances only after the snapshot commit above succeeded — so
-        // the sidecar can never claim rounds the table doesn't have.
+        // O(delta) index maintenance (invalidates the previous index),
+        // fed from the round's cached fetch delta. With a store, the
+        // round's run events persist into the sidecar DURING the add's
+        // materialization, and the index manifest advances only after the
+        // snapshot commit above succeeded — so the sidecar can never claim
+        // rounds the table doesn't have.
         seenIdx = seenIdx.map { idx =>
           val sink = store.map(st => SeenIndexStore.Sink(st.indexDir, newState.round))
-          val next = SeenIndex.add(idx, seenDeltaCk, sink)
+          val next = SeenIndex.add(idx, r.fetched.select("url_hash"), sink)
           store.foreach { st =>
             SeenIndexStore.writeManifest(st.indexDir, next.buckets, newState.round)
             SeenIndexStore.gc(st.indexDir, newState.round)
           }
           next
         }
-        // the per-round delta checkpoints keep LINEAGE flat, but the union
+        // the cached per-round deltas keep LINEAGE flat, but the union
         // TREE itself still deepens one node per round — a 10^4-round crawl
         // would accrete a 10^4-way union plan on the driver. Collapse it
         // every K rounds: with a store, reload the state from the committed
@@ -561,9 +534,7 @@ object FrontierEngine {
         if (newState.round % planCollapseEvery == 0) {
           newState = store.flatMap(_.loadLatest(spark)) match {
             case Some(s) => s
-            case None => newState.copy(
-              seen = newState.seen.localCheckpoint(true),
-              fetched = newState.fetched.localCheckpoint(true))
+            case None => newState.copy(fetched = newState.fetched.localCheckpoint(true))
           }
         }
         state = newState
@@ -588,7 +559,7 @@ object FrontierEngine {
       seenIdx.foreach(_.release())
       lastSeenModeLog = modeLog.toList
     }
-    (state.fetched, state.seen)
+    (state.fetched, state.fetched.select("url_hash", "url"))
   }
 
   def emptyFetched(spark: SparkSession): DataFrame = {
@@ -598,7 +569,8 @@ object FrontierEngine {
         "partition_id", "status", "title", "text", "etag")
   }
 
+  /** The crawl's state at a round boundary. `fetched` is the fetch log,
+    * the one record of the seen set. */
   final case class CrawlState(
-      frontier: DataFrame, seen: DataFrame, fetched: DataFrame,
-      round: Int, fetchedCount: Long)
+      frontier: DataFrame, fetched: DataFrame, round: Int, fetchedCount: Long)
 }

@@ -8,8 +8,8 @@ import org.apache.spark.storage.StorageLevel
 /** Bucket-co-partitioned EXACT seen-set index — the O(delta)-per-round form
   * of the seen-membership test.
   *
-  * The plain anti-join (and the Bloom path's confirm join) shuffles the
-  * ENTIRE seen table every round: at a 10^10-URL seen set that is an
+  * The plain anti-join shuffles the ENTIRE seen set (the fetch log's
+  * hashes) every round: at a 10^10-URL seen set that is an
   * O(seen) network pass per scheduling round, the dominant recurring cost
   * of a long crawl. This index keeps the seen set RESIDENT and
   * partitioned: partition `b` of [[runs]] holds exactly the hashes with
@@ -27,13 +27,12 @@ import org.apache.spark.storage.StorageLevel
   * between rounds (immutable arrays), so the per-round heap/IO cost is
   * O(delta + compacted buckets), not O(seen). Same durability trade as
   * the engine's other localCheckpoints: executor loss ⇒ rebuild from the
-  * committed seen table ([[SeenIndex.fromSeen]]), which the resume path
+  * committed fetch log ([[SeenIndex.fromSeen]]), which the resume path
   * does anyway.
   *
   * Sizing: [[bucketsFor]] keeps a bucket's resident longs ≤ ~32 MiB — at
   * 10^10 URLs that is ~2500 buckets of ~4M hashes; per-task memory during
-  * a probe is ONE bucket, independent of total seen size (the same
-  * discipline as [[SeenFilter]]'s 8 MiB Bloom buckets).
+  * a probe is ONE bucket, independent of total seen size.
   *
   * Semantics: exactly the anti-join's (identity = the 64-bit xxh64 url
   * hash, the engine-wide convention) — CrawlSpec pins byte-identical crawl
@@ -45,7 +44,7 @@ final class SeenIndex private (
     val count: Long) {
 
   /** Release the resident blocks (call when the crawl is done with the
-    * index; the committed seen table remains the durable record). */
+    * index; the committed fetch log remains the durable record). */
   def release(): Unit = { runs.unpersist(false); () }
 
   /** (total runs across buckets, total resident hashes) — test/diagnostic. */
@@ -92,9 +91,10 @@ object SeenIndex {
     new SeenIndex(buckets, rdd, 0L)
   }
 
-  /** Rebuild from a committed seen table (resume path / first use). With
-    * `sink` set the rebuilt buckets are also persisted as durable base
-    * runs, so the NEXT resume is a [[SeenIndexStore.load]] instead. */
+  /** Rebuild from the seen hashes (the fetch log's `url_hash` column;
+    * resume path / first use). With `sink` set the rebuilt buckets are also
+    * persisted as durable base runs, so the NEXT resume is a
+    * [[SeenIndexStore.load]] instead. */
   def fromSeen(spark: SparkSession, seen: DataFrame, buckets: Int,
       sink: Option[SeenIndexStore.Sink] = None): SeenIndex =
     add(empty(spark, buckets), seen, sink)
@@ -179,7 +179,7 @@ object SeenIndex {
     * shuffles once onto the bucket partitioner; the seen side is RESIDENT
     * (zero shuffle). The flag rides as a column on an eagerly
     * localCheckpointed frame so the probe executes exactly once and both
-    * branches re-read the checkpoint (the [[SeenFilter.split]] pattern). */
+    * branches re-read the checkpoint. */
   def split(spark: SparkSession, candidates: DataFrame, idx: SeenIndex)
       : (DataFrame, DataFrame) = {
     val b = idx.buckets

@@ -7,7 +7,7 @@ import org.apache.spark.sql.SparkSession
 /** Durable sidecar for [[SeenIndex]]: per-bucket sorted-run files under the
   * snapshot root (`<root>/seen_index/`), so a restarted crawl reloads the
   * resident index with ZERO shuffle instead of re-deriving it from the
-  * committed seen table (`SeenIndex.fromSeen` — an O(seen) shuffle+sort at
+  * committed fetch log (`SeenIndex.fromSeen` — an O(seen) shuffle+sort at
   * exactly the moment, restart of a long crawl, the index exists to avoid).
   *
   * Layout is the in-memory LSM mirrored on disk, one file per (bucket,
@@ -33,8 +33,8 @@ import org.apache.spark.sql.SparkSession
   * manifest advances AFTER, and the crawl writes it only after the round's
   * snapshot commit. So the manifest round is always ≤ the store's
   * committed round, and a crash between commit and index persist just
-  * means resume tops up the few missed rounds from their committed
-  * `seen/` parquet deltas (O(missed deltas)).
+  * means resume tops up the few missed rounds from the `url_hash` column
+  * of their committed `fetch_log/` deltas (O(missed deltas)).
   *
   * Writes use the Hadoop FileSystem API (local fs here, HDFS/S3A on a
   * cluster). Write amplification is the in-memory structure's: one
@@ -216,7 +216,7 @@ object SeenIndexStore {
     * guarantees it; a violation means a foreign/corrupt sidecar and falls
     * back to None → rebuild). Returns the index and the round it
     * represents; the caller tops up rounds (idxRound, storeRound] from
-    * the committed seen deltas. The load moves ONLY bucket IDs across the
+    * the committed fetch_log deltas. The load moves ONLY bucket IDs across the
     * cluster: each partition reads its own bucket's files. */
   def load(spark: SparkSession, dir: String, storeRound: Int)
       : Option[(SeenIndex, Int)] =

@@ -1,6 +1,6 @@
 package graft.engine
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 /** Minimal Iceberg-style snapshot/manifest layer over Parquet (SURVEY.md §4:
@@ -8,11 +8,14 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
   * round commits:
   *
   *   <root>/r<N>/frontier/            parquet (full: the frontier mutates)
-  *   <root>/r<N>/seen/                parquet (delta — seen is append-only)
   *   <root>/r<N>/fetch_log/           parquet (delta, this round only)
   *   <root>/r<N>/manifest.json        {round, fetchedCount, parent,
   *                                     per-partition lineage, metrics}
   *   <root>/_current                  atomic pointer (rename commit)
+  *
+  * The fetch log is also the SEEN SET: a URL is seen iff its url_hash is in
+  * some fetch_log delta, so readers project `(url_hash, url)` from it and
+  * no second copy of those columns is stored.
   *
   * The PAGES table is a logical view — fetch_log filtered to status=OK
   * ([[pagesAsOf]]/[[pagesDelta]]), Iceberg-metadata-view style. r1-r8
@@ -53,17 +56,13 @@ final class SnapshotStore(rootDir: String) {
       s"r${state.round}.staging.${java.util.UUID.randomUUID().toString.take(8)}")
     Files.createDirectories(staging)
     state.frontier.write.mode("overwrite").parquet(staging.resolve("frontier").toString)
-    // seen is append-only: commit the O(delta) round delta, never the full
-    // set — at 10^10 URLs a full per-round rewrite of the seen table would
-    // dominate every round's I/O. Readers union the deltas (one multi-path
-    // scan), exactly like fetch_log.
-    // Delta writes coalesce to ~256k rows/file: r.taken is the exact row
-    // count, and letting a small delta fan out across the session's full
-    // parallelism pays a per-file fixed cost (open + footer + commit)
-    // dozens of times per table per round for KB-sized files.
+    // fetch_log is append-only: commit the O(delta) round delta, never the
+    // full log — readers union the deltas (one multi-path scan).
+    // The delta write coalesces to ~256k rows/file: r.taken is the exact
+    // row count, and letting a small delta fan out across the session's
+    // full parallelism pays a per-file fixed cost (open + footer + commit)
+    // dozens of times per round for KB-sized files.
     val files = math.max(1, math.min(32, (r.taken / 262144L).toInt + 1))
-    r.seenDelta.coalesce(files).write.mode("overwrite")
-      .parquet(staging.resolve("seen").toString)
     r.fetched.coalesce(files).write.mode("overwrite")
       .parquet(staging.resolve("fetch_log").toString)
 
@@ -119,14 +118,16 @@ final class SnapshotStore(rootDir: String) {
 
   /** The committed frontier of one round — the crawl loop reads it back as
     * the next state's leaf (the commit doubles as the round's lineage cut,
-    * replacing a second localCheckpoint materialization of the same rows). */
-  def frontierPath(round: Int): String =
-    dir(round).resolve("frontier").toString
+    * replacing a second localCheckpoint materialization of the same rows).
+    * The schema is known, so the read runs no schema-inference job. */
+  def readFrontier(spark: SparkSession, round: Int): DataFrame =
+    spark.read.schema(SnapshotStore.FrontierSchema)
+      .parquet(dir(round).resolve("frontier").toString)
 
-  /** The committed seen delta of one round, if present (absent after
+  /** The committed fetch_log delta of one round, if present (absent after
     * expiry compaction — the compacted keepRound dir then holds the union). */
-  def seenDeltaPath(round: Int): Option[String] = {
-    val p = dir(round).resolve("seen")
+  def fetchLogPath(round: Int): Option[String] = {
+    val p = dir(round).resolve("fetch_log")
     if (Files.exists(p)) Some(p.toString) else None
   }
 
@@ -162,14 +163,9 @@ final class SnapshotStore(rootDir: String) {
     * union would grow the plan O(rounds); a single relation keeps the plan
     * O(1), lets the scheduler pack splits, and the status predicate
     * reaches the parquet scan as a pushed filter. */
-  def pagesAsOf(spark: SparkSession, round: Int): DataFrame = {
-    val paths = (1 to round)
-      .map(i => dir(i).resolve("fetch_log"))
-      .filter(p => Files.exists(p))
-      .map(_.toString)
-    spark.read.parquet(paths: _*)
+  def pagesAsOf(spark: SparkSession, round: Int): DataFrame =
+    spark.read.parquet((1 to round).flatMap(fetchLogPath): _*)
       .filter(org.apache.spark.sql.functions.col("status") === "OK")
-  }
 
   /** One round's pages delta (the status=OK slice of that round's
     * fetch_log delta). */
@@ -179,25 +175,22 @@ final class SnapshotStore(rootDir: String) {
 
   /** Snapshot expiry — the reference's periodic TTL sweep
     * (src/cache.ts:205-210) at table scale, Iceberg expire_snapshots
-    * style: compacts all fetch_log/seen deltas of rounds ≤ `keepRound`
-    * into r<keepRound> and deletes the older round directories (the pages
-    * view rides on fetch_log, so one compaction covers both). Reads after
+    * style: compacts all fetch_log deltas of rounds ≤ `keepRound` into
+    * r<keepRound> and deletes the older round directories (the pages view
+    * and the seen set ride on fetch_log, so one compaction covers all
+    * three). Reads after
     * expiry (pagesAsOf ≥ keepRound, loadLatest) see identical data; time
     * travel to expired rounds is intentionally gone, exactly like Iceberg
     * after snapshot expiration. */
   def expireSnapshotsBefore(spark: SparkSession, keepRound: Int): Unit = {
     require(currentRound.exists(_ >= keepRound), s"round $keepRound not committed")
     val d = dir(keepRound)
-    // compact into temp dirs first: the inputs are read lazily, so the
-    // target dirs cannot be overwritten in place
-    def compact(sub: String): Unit = {
-      val tmp = d.resolve(s"${sub}_compact_tmp")
-      val paths = (1 to keepRound).map(i => dir(i).resolve(sub))
-        .filter(Files.exists(_)).map(_.toString)
-      spark.read.parquet(paths: _*).write.mode("overwrite").parquet(tmp.toString)
-      rmTree(d.resolve(sub)); Files.move(tmp, d.resolve(sub))
-    }
-    compact("fetch_log"); compact("seen")
+    // compact into a temp dir first: the inputs are read lazily, so the
+    // target dir cannot be overwritten in place
+    val tmp = d.resolve("fetch_log_compact_tmp")
+    spark.read.parquet((1 to keepRound).flatMap(fetchLogPath): _*)
+      .write.mode("overwrite").parquet(tmp.toString)
+    rmTree(d.resolve("fetch_log")); Files.move(tmp, d.resolve("fetch_log"))
     (1 until keepRound).foreach(i => rmTree(dir(i)))
   }
 
@@ -205,22 +198,17 @@ final class SnapshotStore(rootDir: String) {
     * expired rounds' dirs are simply absent). */
   def loadLatest(spark: SparkSession): Option[FrontierEngine.CrawlState] =
     currentRound.map { rN =>
-      val d = dir(rN)
-      val frontier = spark.read.parquet(d.resolve("frontier").toString)
-      val seen = spark.read.parquet(
-        (1 to rN).map(i => dir(i).resolve("seen"))
-          .filter(Files.exists(_)).map(_.toString): _*)
-      val fetched = spark.read.parquet(
-        (1 to rN).map(i => dir(i).resolve("fetch_log"))
-          .filter(Files.exists(_)).map(_.toString): _*)
+      val fetched = spark.read.parquet((1 to rN).flatMap(fetchLogPath): _*)
       val count = manifest(rN)
         .flatMap(m => "\"fetched_count\":(\\d+)".r.findFirstMatchIn(m).map(_.group(1).toLong))
         .getOrElse(fetched.count())
-      FrontierEngine.CrawlState(frontier, seen, fetched, rN, count)
+      FrontierEngine.CrawlState(readFrontier(spark, rN), fetched, rN, count)
     }
 }
 
 object SnapshotStore {
+  private val FrontierSchema = Encoders.product[FrontierEngine.FrontierRow].schema
+
   /** Thrown when another writer committed the same round first (the
     * atomic staging-dir rename found `r<N>` already present). The loser's
     * staging is already cleaned up; retry by reloading the latest

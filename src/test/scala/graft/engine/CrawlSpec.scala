@@ -131,6 +131,9 @@ class CrawlSpec extends AnyFunSuite {
     val m = store.manifest(1).get
     assert(m.contains("\"partitions\""))
     assert(m.contains("\"status_counts\""))
+    // the fetch log is the one record of the seen set: no second table
+    assert(new java.io.File(dir, "r1").list().toSet ==
+      Set("frontier", "fetch_log", "manifest.json"))
   }
 
   test("exact seen index: crawl is byte-identical to the anti-join path") {
@@ -206,7 +209,7 @@ class CrawlSpec extends AnyFunSuite {
   test("durable seen index: sidecar survives a missed round (manifest behind commit)") {
     // simulate a crash between snapshot commit and index persist by
     // rolling the manifest back one round, then resume: the loader must
-    // top up the missed round from its committed seen/ parquet delta
+    // top up the missed round from its committed fetch_log/ parquet delta
     val dir = java.nio.file.Files.createTempDirectory("crawl-idx-topup").toString
     val store = new SnapshotStore(dir)
     val ocfg = CrawlOracle.Config(2, 200, 7, true, true, web)
@@ -483,11 +486,9 @@ class CrawlSpec extends AnyFunSuite {
           "partition_id", "status", "title", "text", "etag")
       val st = FrontierEngine.CrawlState(
         frontier = FrontierEngine.seedFrontier(spark, Seq("http://h0.example/")).toDF(),
-        seen = Seq.empty[(Long, String)].toDF("url_hash", "url"),
         fetched = fetched, round = round, fetchedCount = 1L)
       val r = FrontierEngine.RoundResult(fetched,
         FrontierEngine.seedFrontier(spark, Seq("http://h0.example/next")),
-        Seq((tag.hashCode.toLong, s"http://h0.example/$tag")).toDF("url_hash", "url"),
         taken = 1L)
       (st, r)
     }
@@ -534,65 +535,6 @@ class CrawlSpec extends AnyFunSuite {
     val all = store.loadLatest(spark).get.fetched
       .select("title").collect().map(_.getString(0)).toSet
     assert(all == Set(winner, loser))
-  }
-
-  test("bloom prefilter never produces false negatives (no lost URLs)") {
-    import spark.implicits._
-    val hashes = (0L until 5000L).map(i => graft.core.UrlNorm.urlHash(s"http://h$i.example/"))
-    val seenDf = hashes.map(h => (h, s"u$h")).toDF("url_hash", "url")
-    val params = SeenFilter.Params(buckets = 16, bitsPerBucket = 1 << 14)
-    val filters = SeenFilter.build(spark, seenDf, params)
-    // every seen hash must be flagged possibly-seen
-    val cand = hashes.map(h => Tuple1(h)).toDF("url_hash")
-    val (fresh, maybe) = SeenFilter.split(spark, cand, filters, params)
-    assert(fresh.count() == 0)
-    assert(maybe.count() == hashes.size)
-    // unseen hashes: most pass as fresh (fp rate sane), none are dropped
-    val unseen = (100000L until 105000L).map(i => Tuple1(graft.core.UrlNorm.urlHash(s"http://x$i/")))
-      .toDF("url_hash")
-    val (fresh2, maybe2) = SeenFilter.split(spark, unseen, filters, params)
-    assert(fresh2.count() + maybe2.count() == 5000)
-    assert(maybe2.count() < 500) // <10% fp at this sizing
-  }
-
-  test("bloom-prefiltered crawl is byte-identical to the exact path") {
-    // same crawl, seen-membership routed through the co-partitioned Bloom
-    // prefilter + exact confirm — ordering, statuses, text, and the final
-    // seen set must not change (no false negatives by construction)
-    val ocfg = CrawlOracle.Config(2, 120, 7, true, true, web)
-    val oracle = CrawlOracle.run(seeds(2), ocfg)
-    val ecfg = FrontierEngine.Config(2, 120, 7, true, true, 4, web,
-      bloomPrefilter = true)
-    val (fetched, seen) = FrontierEngine.crawl(spark, seeds(2), ecfg)
-    assert(engineRows(fetched).toSeq == oracleRows(oracle))
-    assert(seen.count() == oracle.seen.size)
-  }
-
-  test("bloom probe is bucket-co-partitioned: no full filter-set broadcast") {
-    import spark.implicits._
-    val seenDf = (0L until 2000L)
-      .map(i => (graft.core.UrlNorm.urlHash(s"http://h$i.example/"), s"u$i"))
-      .toDF("url_hash", "url")
-    val params = SeenFilter.Params(buckets = 16, bitsPerBucket = 1 << 14)
-    val filters = SeenFilter.build(spark, seenDf, params)
-    // build stays distributed — a DataFrame of (bucket, bloom), never a map
-    assert(filters.columns.toSeq == Seq("bucket", "bloom"))
-    val cand = (0L until 1000L).map(i => Tuple1(graft.core.UrlNorm.urlHash(s"http://c$i/")))
-      .toDF("url_hash")
-    val (fresh, maybe) = SeenFilter.split(spark, cand, filters, params)
-    // the probe runs as a zip of two shuffles co-partitioned on the bucket
-    // key — one partition per bucket, and NO broadcast anywhere in the
-    // lineage (per-task filter memory = its own buckets only). The probe
-    // RDD is localCheckpointed (single execution feeding both branches),
-    // so its pre-truncation lineage is read from the capture hook.
-    val probeLineage = SeenFilter.lastProbeLineage
-    assert(fresh.rdd.getNumPartitions == params.buckets)
-    assert(probeLineage.contains("ZippedPartitionsRDD"), probeLineage)
-    assert(!probeLineage.toLowerCase.contains("broadcast"), probeLineage)
-    // both branches read the SAME checkpointed probe, not two re-executions
-    val branchLineage = fresh.rdd.toDebugString
-    assert(branchLineage.contains("LocalCheckpointRDD"), branchLineage)
-    assert(fresh.count() + maybe.count() == 1000)
   }
 
   test("budget window ranks by (priority, next_fetch_time) with FIFO tiebreak") {
@@ -642,7 +584,7 @@ class CrawlSpec extends AnyFunSuite {
     // the deferred B (nft=3) under the (priority, next_fetch_time) rank
     val frontier2 = r1.newFrontier.union(Seq(row(3, 0, 5L)).toDS())
     val r2 = FrontierEngine.round(spark, frontier2,
-      emptySeen.union(r1.seenDelta), 2, 1L, cfg)
+      emptySeen.union(r1.fetched.select("url_hash", "url")), 2, 1L, cfg)
     assert(r2.fetched.select("url").as[String].collect().toSeq ==
       Seq(SyntheticWeb.pageUrl(0, 3)))
     assert(r2.newFrontier.collect().map(_.url).toSeq ==
@@ -693,29 +635,6 @@ class CrawlSpec extends AnyFunSuite {
     assert(fetchedAfter == fetchedBefore)
   }
 
-  test("Params.forCount keeps fp rate <5% at 100x the default sizing") {
-    import spark.implicits._
-    // default Params saturate past ~4M URLs; forCount must stay <5% fp.
-    // 400k items stands in for 100x-the-default-per-bucket density: the
-    // derived sizing must allocate >=10 bits/item regardless of scale.
-    val n = 400000
-    val params = SeenFilter.Params.forCount(n)
-    assert(params.buckets.toLong * params.bitsPerBucket >= n * 10L,
-      s"undersized: $params for $n items")
-    val seenDf = spark.range(n)
-      .selectExpr("xxhash64(concat('http://seen', id, '.example/')) AS url_hash")
-    val filters = SeenFilter.build(spark, seenDf, params)
-    val unseen = spark.range(20000)
-      .selectExpr("xxhash64(concat('http://unseen', id, '.other/')) AS url_hash")
-    val (fresh, maybe) = SeenFilter.split(spark, unseen, filters, params)
-    val fp = maybe.count().toDouble / (fresh.count() + maybe.count())
-    assert(fp < 0.05, s"fp rate $fp at sizing $params")
-    // and scaling: 10^10 items must still cap each bucket's filter at 8 MiB
-    val huge = SeenFilter.Params.forCount(10000000000L)
-    assert(huge.bitsPerBucket <= (1 << 26))
-    assert(huge.buckets.toLong * huge.bitsPerBucket >= 10000000000L * 10L * 9 / 10)
-  }
-
   test("cache clear = snapshot minus predicate (cache.ts:127-141 semantics)") {
     val dir = java.nio.file.Files.createTempDirectory("crawl-clear").toString
     val store = new SnapshotStore(dir)
@@ -758,5 +677,21 @@ class CrawlSpec extends AnyFunSuite {
       .select("partition_id").distinct().count()
     assert(byRound(bigRound) > 8, s"round sizes: $byRound")
     assert(parts > 1, s"mega-host serialized into one partition (round $bigRound)")
+  }
+
+  test("store-backed index crawl: Spark jobs per committed round stay pinned") {
+    val dir = java.nio.file.Files.createTempDirectory("crawl-jobs").toString
+    val store = new SnapshotStore(dir)
+    val oracle = CrawlOracle.run(seeds(1), CrawlOracle.Config(2, 200, 7, true, true, web))
+    val ecfg = FrontierEngine.Config(2, 200, 7, true, true, 4, web, exactSeenIndex = true)
+    val (fetched, jobs) = graft.SparkJobs.count(spark.sparkContext) {
+      FrontierEngine.crawl(spark, seeds(1), ecfg, Some(store))._1
+    }
+    assert(engineRows(fetched).toSeq == oracleRows(oracle))
+    // 28 jobs over 4 committed rounds, the initial index build included.
+    // A second seen table or a schema-inferring read-back of a committed
+    // leaf would each add one job per round.
+    val rounds = store.currentRound.get
+    assert(jobs <= 7 * rounds, s"$jobs jobs over $rounds committed rounds")
   }
 }

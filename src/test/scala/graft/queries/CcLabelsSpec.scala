@@ -1,12 +1,9 @@
 package graft.queries
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession, functions => F}
 import org.scalatest.funsuite.AnyFunSuite
 
-import java.util.concurrent.ConcurrentLinkedQueue
 import scala.collection.mutable
-import scala.jdk.CollectionConverters._
 
 /** [[DedupQueries.ccLabels]]: both finishes (one task's union-find, and the
   * label loop forced with `smallEdgesMax = -1`) against a scalar union-find,
@@ -102,32 +99,12 @@ class CcLabelsSpec extends AnyFunSuite {
     val copies = (0L until 1500L).map(i => (10000 + 2 * i, 10001 + 2 * i))
     val p = pairs(clique ++ copies, parts = 8).cache()
     assert(p.count() == 46350)
-    val sc = spark.sparkContext
-    val groups = new ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        groups.add(String.valueOf(
-          Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull))
-    }
-    sc.addSparkListener(listener)
     try {
-      sc.setJobGroup("cc-guard", "ccLabels")
-      val n = DedupQueries.ccLabels(spark, p).count()
-      // a marker job: events reach a listener in order, so once the marker
-      // arrives every job of the call has been counted
-      sc.setJobGroup("cc-guard-end", "marker")
-      sc.parallelize(Seq(1), 1).count()
-      sc.clearJobGroup()
-      val deadline = System.nanoTime() + 30L * 1000000000L
-      while (!groups.contains("cc-guard-end") && System.nanoTime() < deadline)
-        Thread.sleep(20)
-      assert(groups.contains("cc-guard-end"), "marker job never reached the listener")
+      val (n, jobs) = graft.SparkJobs.count(spark.sparkContext) {
+        DedupQueries.ccLabels(spark, p).count()
+      }
       assert(n == 300 + 3000)
-      val jobs = groups.asScala.count(_ == "cc-guard")
       assert(jobs <= 6, s"ccLabels(...).count() ran $jobs jobs")
-    } finally {
-      sc.removeSparkListener(listener)
-      p.unpersist()
-    }
+    } finally p.unpersist()
   }
 }
