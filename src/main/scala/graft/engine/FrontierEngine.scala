@@ -1,6 +1,7 @@
 package graft.engine
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.core.{Extract, Robots, UrlNorm}
@@ -92,10 +93,9 @@ object FrontierEngine {
       fetched: DataFrame, // FetchedRow sans links
       newFrontier: Dataset[FrontierRow],
       taken: Long,
-      /** release the round's transient caches — call AFTER newFrontier has
-        * been materialized (checkpoint/commit); the fetched cache is NOT
-        * released here (later rounds union it, and the seen index reads
-        * the round's hashes from it). */
+      /** release the ranked frontier and the FIFO index's sorted cache —
+        * call AFTER newFrontier and fetched are materialized (checkpoint/
+        * commit). The fetched cache stays: later rounds union it. */
       cleanup: () => Unit = () => ())
 
   def seedFrontier(spark: SparkSession, seeds: Seq[String]): Dataset[FrontierRow] = {
@@ -139,10 +139,10 @@ object FrontierEngine {
     // 2. seen-membership: exact, on the 64-bit hash
     val fresh = seenIdx match {
       case Some(idx) =>
-        // resident exact index: only the candidate side moves. Presence-
-        // driven: [[crawl]] decides the mode (config flag or auto-switch
-        // at the measured crossover) by passing the index or not.
-        SeenIndex.split(spark, deduped, idx)._1
+        // resident exact index: only the candidate side moves, filtered in
+        // a co-partitioned zip that runs once, when `ranked` is persisted.
+        // [[crawl]] picks the mode by passing the index or not.
+        SeenIndex.unseen(spark, deduped, idx)
       case None =>
         // anti-join against the fetch log's hashes (the scan reads only
         // that column). While the fetchedSoFar hashes fit a broadcast
@@ -182,7 +182,7 @@ object FrontierEngine {
 
     // 4. global FIFO order index (distributed two-phase ranking) + cap
     val room = cfg.maxPages - fetchedSoFar
-    val (indexed, indexedTotal) =
+    val (indexed, indexedTotal, sortedCached) =
       withGlobalFifoIndexCounted(spark, budgeted, fetchedSoFar, frontierEst)
     val taken = indexed.filter(col("order_idx") < fetchedSoFar + room)
     val overflow = indexed.filter(col("order_idx") >= fetchedSoFar + room)
@@ -237,10 +237,7 @@ object FrontierEngine {
 
     // 6. children → next frontier (membership is tested next round)
     val children = fetchedCached
-      // depth rides the exploded row directly — the former self-join of
-      // fetchedCached with itself on parent_order re-derived a value that
-      // is already on the same row, paying a per-round join (guide §2.4:
-      // remove shuffles outright)
+      // depth rides the exploded row: no self-join on parent_order
       .select(col("order_idx").as("parent_order"),
         (col("depth") + 1).as("depth"), posexplode(col("links")))
       .select(
@@ -260,7 +257,7 @@ object FrontierEngine {
       fetched = fetchedCached.drop("links"),
       newFrontier = deferredByBudget.union(overflow).union(children),
       taken = takenCount,
-      cleanup = () => { ranked.unpersist(false); () })
+      cleanup = () => { ranked.unpersist(false); sortedCached.unpersist(false); () })
   }
 
   /** Union-plan collapse interval for iterative crawls (see [[crawl]]). */
@@ -283,13 +280,11 @@ object FrontierEngine {
       priority: Double, next_fetch_time: Long, order_idx: Long)
 
   /** Distributed global FIFO index: range-partition by the FIFO key, then
-    * local rank + broadcast prefix offsets — no single-partition window. */
-  def withGlobalFifoIndex(spark: SparkSession, df: DataFrame,
-      startAt: Long): DataFrame =
-    withGlobalFifoIndexCounted(spark, df, startAt, -1L)._1
-
-  /** Same, also returning the total row count (already known from the
-    * per-partition counts — callers must not pay another count() job).
+    * local rank + broadcast prefix offsets — no single-partition window.
+    * Returns the indexed frame, its total row count (already known from the
+    * per-partition counts — callers must not pay another count() job) and
+    * the cached sorted frame both passes read, which the caller unpersists
+    * once the indexed frame's consumers are materialized.
     *
     * This is the scheduling hot path (every frontier row, every round), so
     * both passes stay TYPED: per-partition counts come from a one-row-per-
@@ -300,7 +295,7 @@ object FrontierEngine {
     * Seq copy + object Row per row, the round-1 lesson's 32-thread scaling
     * killer (BASELINE.md). */
   def withGlobalFifoIndexCounted(spark: SparkSession, df: DataFrame,
-      startAt: Long, estRows: Long = -1L): (DataFrame, Long) = {
+      startAt: Long, estRows: Long = -1L): (DataFrame, Long, Dataset[FrontierRow]) = {
     import spark.implicits._
     // scale-adaptive partition count (guide §2.2): with a caller-supplied
     // row estimate, size range partitions at ~1M FrontierRows (~150 MB)
@@ -341,13 +336,15 @@ object FrontierEngine {
           r.link_pos, r.priority, r.next_fetch_time, v)
       }
     }
-    (out.toDF(), counts.map(_._2).sum)
+    (out.toDF(), counts.map(_._2).sum, sortedCached)
   }
 
   /** Drive a full crawl from seeds; returns (all fetched rows, final seen
     * set as (url_hash, url) — a projection of the fetched rows). When
     * `store` is given, every round commits deltas + lineage and the crawl
-    * can resume from the latest snapshot. */
+    * can resume from the latest snapshot. Only the cached per-round fetch
+    * deltas outlive the call, and the returned frames read them: they are
+    * valid until the caller clears the cache (they cannot be recomputed). */
   def crawl(spark: SparkSession, seeds: Seq[String], cfg: Config,
       store: Option[SnapshotStore] = None): (DataFrame, DataFrame) = {
     import spark.implicits._
@@ -402,7 +399,7 @@ object FrontierEngine {
                   // keepRound delta holds the union of expired rounds —
                   // already-resident hashes are dropped bucket-locally.
                   // Only url_hash is selected, so parquet skips the text.
-                  idx = SeenIndex.add(idx, spark.read.parquet(p).select("url_hash"),
+                  idx = SeenIndex.add(idx, st.readFetchLog(spark, Seq(p)).select("url_hash"),
                     Some(SeenIndexStore.Sink(st.indexDir, k)))
                 }
               }
@@ -459,9 +456,8 @@ object FrontierEngine {
       if (cfg.exactSeenIndex) Some(buildIndex(state)) else None
     var continue = state.fetchedCount < cfg.maxPages
     // try/finally: a throw anywhere in the loop (e.g. CommitConflictException
-    // from a losing OCC writer) must still release the resident index blocks
-    // and the current round's transient caches — exception exits used to
-    // leak one persisted frontier + the index per failed crawl invocation
+    // from a losing OCC writer) must still release the resident index, the
+    // frontier leaf and the current round's transient caches
     try while (continue) {
       scaleRoundConfs()
       // auto mode selection: once the seen set crosses the configured
@@ -485,14 +481,12 @@ object FrontierEngine {
         // round's DAG embeds all previous rounds and the driver OOMs on
         // plan strings alone. With a store, the snapshot COMMIT is the
         // materialization: the frontier is written to committed parquet
-        // and read back, with its known schema, as the next state's leaf
-        // (r1-r8 additionally localCheckpoint-ed the same rows first,
-        // writing every frontier byte twice per round — half the commit
-        // overhead the r8 interleaved A/B measured). Without a store,
-        // localCheckpoint is the cut. The fetch log, which is also the
-        // seen set, is NEVER rewritten per round: the round's delta is
-        // already cached with flat lineage and is unioned in — at 10^10
-        // URLs a per-round full rewrite would dominate every round's cost.
+        // and read back, with its known schema, as the next state's leaf.
+        // Without a store, localCheckpoint is the cut and the previous leaf
+        // is released. The fetch log, which is also the seen set, is NEVER
+        // rewritten per round: the round's delta is already cached with
+        // flat lineage and is unioned in — at 10^10 URLs a per-round full
+        // rewrite would dominate every round's cost.
         val frontierNext = store match {
           case Some(st) =>
             val pending = CrawlState(
@@ -502,7 +496,10 @@ object FrontierEngine {
               fetchedCount = state.fetchedCount + r.taken)
             st.commit(spark, pending, r)
             st.readFrontier(spark, pending.round)
-          case None => r.newFrontier.toDF().localCheckpoint(true)
+          case None =>
+            val leaf = r.newFrontier.toDF().localCheckpoint(true)
+            releaseLeaf(state.frontier)
+            leaf
         }
         var newState = CrawlState(
           frontier = frontierNext,
@@ -510,8 +507,10 @@ object FrontierEngine {
           round = state.round + 1,
           fetchedCount = state.fetchedCount + r.taken)
         // O(delta) index maintenance (invalidates the previous index),
-        // fed from the round's cached fetch delta. With a store, the
-        // round's run events persist into the sidecar DURING the add's
+        // fed from the round's cached fetch delta. The round's lazy probe
+        // reads the previous index: `ranked`, the fetch delta and the next
+        // frontier are all materialized above. With a store, the round's
+        // run events persist into the sidecar DURING the add's
         // materialization, and the index manifest advances only after the
         // snapshot commit above succeeded — so the sidecar can never claim
         // rounds the table doesn't have.
@@ -557,17 +556,22 @@ object FrontierEngine {
       spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
       spark.conf.set("spark.sql.shuffle.partitions", prevShuf)
       seenIdx.foreach(_.release())
+      releaseLeaf(state.frontier)
       lastSeenModeLog = modeLog.toList
     }
     (state.fetched, state.fetched.select("url_hash", "url"))
   }
 
-  def emptyFetched(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    Seq.empty[(String, Long, String, Int, Int, Long, Int, String, String, String, String)]
-      .toDF("url", "url_hash", "host", "depth", "round", "order_idx",
-        "partition_id", "status", "title", "text", "etag")
-  }
+  def emptyFetched(spark: SparkSession): DataFrame =
+    spark.createDataFrame(java.util.List.of[Row](), SnapshotStore.FetchLogSchema)
+
+  /** Unpersist a storeless round's checkpointed frontier leaf; a no-op for
+    * any other frame (the seed frontier, a committed parquet read). */
+  private def releaseLeaf(frontier: DataFrame): Unit =
+    frontier.queryExecution.logical match {
+      case leaf: LogicalRDD => leaf.rdd.unpersist(false)
+      case _ =>
+    }
 
   /** The crawl's state at a round boundary. `fetched` is the fetch log,
     * the one record of the seen set. */

@@ -16,8 +16,9 @@ import org.apache.spark.storage.StorageLevel
   * `floorMod(h, buckets) == b`, stored as an LSM-style list of sorted
   * Long runs. Per round only the DELTA (this round's newly fetched
   * hashes) is shuffled — appended as one new sorted run per bucket — and
-  * membership probes zip the candidate side against the resident runs in
-  * bucket-co-partitioned tasks (binary search per run). When a bucket
+  * the membership probe ([[SeenIndex.unseen]]) zips the candidate side
+  * against the resident runs in bucket-co-partitioned tasks and keeps the
+  * candidates found in no run (binary search per run). When a bucket
   * accumulates more than [[MaxRuns]] runs they are k-way merged into one,
   * so probes stay O(MaxRuns · log(seen/buckets)) and the merge cost is
   * amortized O(1) per inserted hash.
@@ -61,8 +62,8 @@ object SeenIndex {
   /** Compact a bucket once it holds more than this many sorted runs. */
   val MaxRuns = 8
 
-  /** Debug lineage of the most recent probe RDD (pre-truncation), so
-    * CrawlSpec can assert the seen side is resident (no seen shuffle). */
+  /** Debug lineage of the most recent probe RDD, so CrawlSpec can assert
+    * the seen side is resident (no seen shuffle). */
   @volatile private[engine] var lastProbeLineage: String = ""
 
   /** ≤ ~4M resident hashes (32 MiB) per bucket; up to defaultParallelism
@@ -174,38 +175,24 @@ object SeenIndex {
     new SeenIndex(b, newRuns, resident)
   }
 
-  /** Exact membership split: (definitely-fresh, seen) — the index-backed
-    * replacement for `candidates LEFT ANTI JOIN seen`. The candidate side
-    * shuffles once onto the bucket partitioner; the seen side is RESIDENT
-    * (zero shuffle). The flag rides as a column on an eagerly
-    * localCheckpointed frame so the probe executes exactly once and both
-    * branches re-read the checkpoint. */
-  def split(spark: SparkSession, candidates: DataFrame, idx: SeenIndex)
-      : (DataFrame, DataFrame) = {
+  /** The candidates whose `url_hash` is NOT in the index — the index-backed
+    * `candidates LEFT ANTI JOIN seen`. Only the candidate side shuffles, onto
+    * the bucket partitioner; the seen side is RESIDENT, and rows pass the
+    * co-partitioned zip's filter unchanged. Lazy: it reads `idx.runs`, so
+    * materialize every consumer before [[add]] invalidates `idx`. */
+  def unseen(spark: SparkSession, candidates: DataFrame, idx: SeenIndex): DataFrame = {
     val b = idx.buckets
-    val schema = candidates.schema
-    val hashIdx = schema.fieldIndex("url_hash")
-    val part = new HashPartitioner(b)
+    val hashIdx = candidates.schema.fieldIndex("url_hash")
     val candKv = candidates.rdd
       .map(r => (java.lang.Math.floorMod(r.getLong(hashIdx), b.toLong).toInt, r))
-      .partitionBy(part)
-    val flagged = candKv.zipPartitions(idx.runs, preservesPartitioning = true) {
+      .partitionBy(new HashPartitioner(b))
+    val fresh = candKv.zipPartitions(idx.runs, preservesPartitioning = true) {
       (cit, rit) =>
         val runs = if (rit.hasNext) rit.next()._2 else Array.empty[Array[Long]]
-        cit.map { case (_, row) =>
-          org.apache.spark.sql.Row.fromSeq(row.toSeq :+
-            containsHash(runs, row.getLong(hashIdx)))
-        }
+        cit.collect { case (_, row) if !containsHash(runs, row.getLong(hashIdx)) => row }
     }
-    val flaggedSchema = org.apache.spark.sql.types.StructType(
-      schema.fields :+ org.apache.spark.sql.types.StructField(
-        "__seen", org.apache.spark.sql.types.BooleanType, nullable = false))
-    lastProbeLineage = flagged.toDebugString
-    val flaggedDf = spark.createDataFrame(flagged, flaggedSchema)
-      .localCheckpoint(true)
-    val keep = schema.fieldNames.map(org.apache.spark.sql.functions.col)
-    (flaggedDf.filter(!org.apache.spark.sql.functions.col("__seen")).select(keep: _*),
-      flaggedDf.filter(org.apache.spark.sql.functions.col("__seen")).select(keep: _*))
+    lastProbeLineage = fresh.toDebugString
+    spark.createDataFrame(fresh, candidates.schema)
   }
 
   private[engine] def containsHash(runs: Array[Array[Long]], h: Long): Boolean = {

@@ -131,6 +131,11 @@ final class SnapshotStore(rootDir: String) {
     if (Files.exists(p)) Some(p.toString) else None
   }
 
+  /** Fetch log deltas as ONE multi-path scan. The schema is known, so the
+    * read runs no schema-inference job. */
+  def readFetchLog(spark: SparkSession, paths: Seq[String]): DataFrame =
+    spark.read.schema(SnapshotStore.FetchLogSchema).parquet(paths: _*)
+
   def currentRound: Option[Int] = {
     val p = root.resolve("_current")
     if (Files.exists(p)) Some(Files.readString(p).trim.stripPrefix("r").toInt)
@@ -164,13 +169,13 @@ final class SnapshotStore(rootDir: String) {
     * O(1), lets the scheduler pack splits, and the status predicate
     * reaches the parquet scan as a pushed filter. */
   def pagesAsOf(spark: SparkSession, round: Int): DataFrame =
-    spark.read.parquet((1 to round).flatMap(fetchLogPath): _*)
+    readFetchLog(spark, (1 to round).flatMap(fetchLogPath))
       .filter(org.apache.spark.sql.functions.col("status") === "OK")
 
   /** One round's pages delta (the status=OK slice of that round's
     * fetch_log delta). */
   def pagesDelta(spark: SparkSession, round: Int): DataFrame =
-    spark.read.parquet(dir(round).resolve("fetch_log").toString)
+    readFetchLog(spark, Seq(dir(round).resolve("fetch_log").toString))
       .filter(org.apache.spark.sql.functions.col("status") === "OK")
 
   /** Snapshot expiry — the reference's periodic TTL sweep
@@ -188,7 +193,7 @@ final class SnapshotStore(rootDir: String) {
     // compact into a temp dir first: the inputs are read lazily, so the
     // target dir cannot be overwritten in place
     val tmp = d.resolve("fetch_log_compact_tmp")
-    spark.read.parquet((1 to keepRound).flatMap(fetchLogPath): _*)
+    readFetchLog(spark, (1 to keepRound).flatMap(fetchLogPath))
       .write.mode("overwrite").parquet(tmp.toString)
     rmTree(d.resolve("fetch_log")); Files.move(tmp, d.resolve("fetch_log"))
     (1 until keepRound).foreach(i => rmTree(dir(i)))
@@ -198,7 +203,7 @@ final class SnapshotStore(rootDir: String) {
     * expired rounds' dirs are simply absent). */
   def loadLatest(spark: SparkSession): Option[FrontierEngine.CrawlState] =
     currentRound.map { rN =>
-      val fetched = spark.read.parquet((1 to rN).flatMap(fetchLogPath): _*)
+      val fetched = readFetchLog(spark, (1 to rN).flatMap(fetchLogPath))
       val count = manifest(rN)
         .flatMap(m => "\"fetched_count\":(\\d+)".r.findFirstMatchIn(m).map(_.group(1).toLong))
         .getOrElse(fetched.count())
@@ -208,6 +213,10 @@ final class SnapshotStore(rootDir: String) {
 
 object SnapshotStore {
   private val FrontierSchema = Encoders.product[FrontierEngine.FrontierRow].schema
+
+  /** The fetch log's columns: a [[FrontierEngine.FetchedRow]] without `links`. */
+  private[engine] val FetchLogSchema = org.apache.spark.sql.types.StructType(
+    Encoders.product[FrontierEngine.FetchedRow].schema.filterNot(_.name == "links"))
 
   /** Thrown when another writer committed the same round first (the
     * atomic staging-dir rename found `r<N>` already present). The loser's

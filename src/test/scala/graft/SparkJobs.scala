@@ -6,7 +6,8 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 
-/** Counts the Spark jobs a block runs, for job-count guards in tests. */
+/** Counts the Spark jobs a block runs and the RDDs it leaves persisted,
+  * for job-count and cache-leak guards in tests. */
 object SparkJobs {
 
   /** Runs `body` under its own job group and returns its value with the
@@ -35,5 +36,12 @@ object SparkJobs {
       sc.clearJobGroup()
       sc.removeSparkListener(listener)
     }
+  }
+
+  /** Runs `body` and returns its value with the number of RDDs it left persisted. */
+  def persisted[T](sc: SparkContext)(body: => T): (T, Int) = {
+    val before = sc.getPersistentRDDs.keySet
+    val out = body
+    (out, (sc.getPersistentRDDs.keySet -- before).size)
   }
 }

@@ -136,37 +136,6 @@ class CrawlSpec extends AnyFunSuite {
       Set("frontier", "fetch_log", "manifest.json"))
   }
 
-  test("exact seen index: crawl is byte-identical to the anti-join path") {
-    // same seeds/config as the BFS + budget oracles, with the resident
-    // bucket-co-partitioned index replacing the O(seen)-shuffle anti-join
-    val ocfg = CrawlOracle.Config(2, 200, 7, true, true, web)
-    val oracle = CrawlOracle.run(seeds(1), ocfg)
-    val ecfg = FrontierEngine.Config(2, 200, 7, true, true, 4, web,
-      exactSeenIndex = true)
-    val (fetched, seen) = FrontierEngine.crawl(spark, seeds(1), ecfg)
-    assert(engineRows(fetched).toSeq == oracleRows(oracle))
-    assert(seen.count() == oracle.seen.size)
-
-    // the membership probe never shuffles the seen side: its lineage has
-    // exactly ONE ShuffledRDD (the candidate partitionBy) zipped against
-    // the resident checkpointed runs
-    val lin = SeenIndex.lastProbeLineage
-    assert(lin.nonEmpty)
-    assert("ShuffledRDD".r.findAllIn(lin).size == 1,
-      s"seen side shuffled in probe lineage:\n$lin")
-    assert(lin.contains("ZippedPartitionsRDD"), s"probe is not a zip:\n$lin")
-  }
-
-  test("exact seen index: multi-seed unbounded-budget BFS (q30's config class)") {
-    val ocfg = CrawlOracle.Config(2, 300, Int.MaxValue, true, true, web)
-    val oracle = CrawlOracle.run(seeds(0, 1, 2, 3), ocfg)
-    val ecfg = FrontierEngine.Config(2, 300, Int.MaxValue, true, true, 4, web,
-      exactSeenIndex = true)
-    val (fetched, seen) = FrontierEngine.crawl(spark, seeds(0, 1, 2, 3), ecfg)
-    assert(engineRows(fetched).toSeq == oracleRows(oracle))
-    assert(seen.count() == oracle.seen.size)
-  }
-
   test("exact seen index: resume from snapshot rebuilds the index (no loss)") {
     val dir = java.nio.file.Files.createTempDirectory("crawl-idx-resume").toString
     val store = new SnapshotStore(dir)
@@ -405,10 +374,8 @@ class CrawlSpec extends AnyFunSuite {
     val (nRuns, _) = idx.runStats()
     assert(nRuns == 3, s"expected base+delta for b0 and base for b1, got $nRuns runs")
     import spark.implicits._
-    val (fresh, seenDf) = SeenIndex.split(spark,
-      Seq(2L, 10L, 20L, 7L, 999L).toDF("url_hash"), idx)
-    assert(seenDf.collect().map(_.getLong(0)).toSet == Set(2L, 10L, 20L, 7L))
-    assert(fresh.collect().map(_.getLong(0)).toSet == Set(999L))
+    val fresh = SeenIndex.unseen(spark, Seq(2L, 10L, 20L, 7L, 999L).toDF("url_hash"), idx)
+    assert(fresh.collect().map(_.getLong(0)).toSeq == Seq(999L))
     idx.release()
 
     // gc removes files superseded by b0's base at r3; keeps r3 base + r4 delta
@@ -441,9 +408,8 @@ class CrawlSpec extends AnyFunSuite {
     val absent = (0 until 100).map(i => 999983L * (i + 1))
       .filterNot(all.contains)
     val cand = (present ++ absent).toDF("url_hash")
-    val (fresh, seenDf) = SeenIndex.split(spark, cand, idx)
-    assert(seenDf.collect().map(_.getLong(0)).toSet == present.toSet)
-    assert(fresh.collect().map(_.getLong(0)).toSet == absent.toSet)
+    val fresh = SeenIndex.unseen(spark, cand, idx)
+    assert(fresh.collect().map(_.getLong(0)).sorted.toSeq == absent.sorted)
   }
 
   test("SeenIndex matches a Set model under randomized adds/probes") {
@@ -458,11 +424,9 @@ class CrawlSpec extends AnyFunSuite {
       idx = SeenIndex.add(idx, delta.toDF("url_hash"))
       assert(idx.count == model.size, s"count ${idx.count} != ${model.size}")
       val probes = Seq.fill(60)(rnd.nextInt(700).toLong).distinct
-      val (fresh, seenDf) = SeenIndex.split(spark, probes.toDF("url_hash"), idx)
-      assert(seenDf.collect().map(_.getLong(0)).toSet ==
-        probes.filter(model.contains).toSet)
-      assert(fresh.collect().map(_.getLong(0)).toSet ==
-        probes.filterNot(model.contains).toSet)
+      val fresh = SeenIndex.unseen(spark, probes.toDF("url_hash"), idx)
+      assert(fresh.collect().map(_.getLong(0)).sorted.toSeq ==
+        probes.filterNot(model.contains).sorted)
     }
   }
 
@@ -679,19 +643,47 @@ class CrawlSpec extends AnyFunSuite {
     assert(parts > 1, s"mega-host serialized into one partition (round $bigRound)")
   }
 
-  test("store-backed index crawl: Spark jobs per committed round stay pinned") {
-    val dir = java.nio.file.Files.createTempDirectory("crawl-jobs").toString
-    val store = new SnapshotStore(dir)
+  test("crawl modes match the oracle, pin their jobs and release round caches") {
+    val sc = spark.sparkContext
     val oracle = CrawlOracle.run(seeds(1), CrawlOracle.Config(2, 200, 7, true, true, web))
-    val ecfg = FrontierEngine.Config(2, 200, 7, true, true, 4, web, exactSeenIndex = true)
-    val (fetched, jobs) = graft.SparkJobs.count(spark.sparkContext) {
-      FrontierEngine.crawl(spark, seeds(1), ecfg, Some(store))._1
+    for (stored <- Seq(true, false); index <- Seq(true, false)) {
+      val mode = s"store=$stored index=$index"
+      val store = Option.when(stored)(
+        new SnapshotStore(java.nio.file.Files.createTempDirectory("crawl-jobs").toString))
+      val ecfg = FrontierEngine.Config(2, 200, 7, true, true, 4, web, exactSeenIndex = index)
+      val (((fetched, seen), jobs), left) = graft.SparkJobs.persisted(sc) {
+        graft.SparkJobs.count(sc)(FrontierEngine.crawl(spark, seeds(1), ecfg, store))
+      }
+      val rows = engineRows(fetched)
+      assert(rows.toSeq == oracleRows(oracle), mode)
+      assert(seen.count() == oracle.seen.size, mode)
+      // only the cached fetch deltas, one per round, outlive the crawl
+      val rounds = rows.map(_._4).distinct.length
+      assert(left <= rounds, s"$mode: $left persistent RDDs left after $rounds rounds")
+      if (index) {
+        // the probe never shuffles the seen side: ONE ShuffledRDD (the
+        // candidate partitionBy) zipped against the resident runs
+        val lin = SeenIndex.lastProbeLineage
+        assert("ShuffledRDD".r.findAllIn(lin).size == 1, s"seen side shuffled:\n$lin")
+        assert(lin.contains("ZippedPartitionsRDD"), s"probe is not a zip:\n$lin")
+      }
+      // 23 jobs over 4 committed rounds, the index build included. A second
+      // seen table, a schema-inferring read-back or an eager probe
+      // checkpoint would each add one job per round.
+      if (stored && index) assert(jobs <= 6 * store.get.currentRound.get, s"$jobs jobs")
     }
-    assert(engineRows(fetched).toSeq == oracleRows(oracle))
-    // 28 jobs over 4 committed rounds, the initial index build included.
-    // A second seen table or a schema-inferring read-back of a committed
-    // leaf would each add one job per round.
-    val rounds = store.currentRound.get
-    assert(jobs <= 7 * rounds, s"$jobs jobs over $rounds committed rounds")
+    // q30's config, storeless with the index: FIFO-index counts, frontier
+    // checkpoint and index add per round (the last round, which takes
+    // nothing, runs only the counts), plus the 2-job index build
+    val oracle30 = CrawlOracle.run(seeds(0, 1, 2, 3),
+      CrawlOracle.Config(2, 300, Int.MaxValue, true, true, web))
+    val q30 = FrontierEngine.Config(2, 300, Int.MaxValue, true, true, 4, web,
+      exactSeenIndex = true)
+    val ((fetched, seen), jobs) =
+      graft.SparkJobs.count(sc)(FrontierEngine.crawl(spark, seeds(0, 1, 2, 3), q30))
+    val rounds = FrontierEngine.lastSeenModeLog.size
+    assert(jobs <= 3 * rounds + 2, s"$jobs jobs over $rounds storeless rounds")
+    assert(engineRows(fetched).toSeq == oracleRows(oracle30))
+    assert(seen.count() == oracle30.seen.size)
   }
 }
