@@ -643,47 +643,66 @@ class CrawlSpec extends AnyFunSuite {
     assert(parts > 1, s"mega-host serialized into one partition (round $bigRound)")
   }
 
-  test("crawl modes match the oracle, pin their jobs and release round caches") {
+  /** Crawls seeds(1) at the guard config (depth 2, 200 pages, budget 7) in
+    * one seen/store mode and checks it against the oracle: rows, seen count,
+    * at most one persistent RDD left per round (the cached fetch deltas) and,
+    * with the index, the probe lineage. Returns the crawl's Spark job count
+    * and its store. */
+  private def guardCrawl(stored: Boolean, index: Boolean): (Int, Option[SnapshotStore]) = {
     val sc = spark.sparkContext
+    val mode = s"store=$stored index=$index"
     val oracle = CrawlOracle.run(seeds(1), CrawlOracle.Config(2, 200, 7, true, true, web))
-    for (stored <- Seq(true, false); index <- Seq(true, false)) {
-      val mode = s"store=$stored index=$index"
-      val store = Option.when(stored)(
-        new SnapshotStore(java.nio.file.Files.createTempDirectory("crawl-jobs").toString))
-      val ecfg = FrontierEngine.Config(2, 200, 7, true, true, 4, web, exactSeenIndex = index)
-      val (((fetched, seen), jobs), left) = graft.SparkJobs.persisted(sc) {
-        graft.SparkJobs.count(sc)(FrontierEngine.crawl(spark, seeds(1), ecfg, store))
-      }
-      val rows = engineRows(fetched)
-      assert(rows.toSeq == oracleRows(oracle), mode)
-      assert(seen.count() == oracle.seen.size, mode)
-      // only the cached fetch deltas, one per round, outlive the crawl
-      val rounds = rows.map(_._4).distinct.length
-      assert(left <= rounds, s"$mode: $left persistent RDDs left after $rounds rounds")
-      if (index) {
-        // the probe never shuffles the seen side: ONE ShuffledRDD (the
-        // candidate partitionBy) zipped against the resident runs
-        val lin = SeenIndex.lastProbeLineage
-        assert("ShuffledRDD".r.findAllIn(lin).size == 1, s"seen side shuffled:\n$lin")
-        assert(lin.contains("ZippedPartitionsRDD"), s"probe is not a zip:\n$lin")
-      }
-      // 23 jobs over 4 committed rounds, the index build included. A second
-      // seen table, a schema-inferring read-back or an eager probe
-      // checkpoint would each add one job per round.
-      if (stored && index) assert(jobs <= 6 * store.get.currentRound.get, s"$jobs jobs")
+    val store = Option.when(stored)(
+      new SnapshotStore(java.nio.file.Files.createTempDirectory("crawl-jobs").toString))
+    val ecfg = FrontierEngine.Config(2, 200, 7, true, true, 4, web, exactSeenIndex = index)
+    val (((fetched, seen), jobs), left) = graft.SparkJobs.persisted(sc) {
+      graft.SparkJobs.count(sc)(FrontierEngine.crawl(spark, seeds(1), ecfg, store))
     }
-    // q30's config, storeless with the index: FIFO-index counts, frontier
-    // checkpoint and index add per round (the last round, which takes
-    // nothing, runs only the counts), plus the 2-job index build
-    val oracle30 = CrawlOracle.run(seeds(0, 1, 2, 3),
+    val rows = engineRows(fetched)
+    assert(rows.toSeq == oracleRows(oracle), mode)
+    assert(seen.count() == oracle.seen.size, mode)
+    val rounds = rows.map(_._4).distinct.length
+    assert(left <= rounds, s"$mode: $left persistent RDDs left after $rounds rounds")
+    if (index) {
+      // the probe never shuffles the seen side: ONE ShuffledRDD (the
+      // candidate partitionBy) zipped against the resident runs
+      val lin = SeenIndex.lastProbeLineage
+      assert("ShuffledRDD".r.findAllIn(lin).size == 1, s"seen side shuffled:\n$lin")
+      assert(lin.contains("ZippedPartitionsRDD"), s"probe is not a zip:\n$lin")
+    }
+    (jobs, store)
+  }
+
+  test("exact seen index: crawl is byte-identical to the anti-join path") {
+    // storeless, the resident bucket-co-partitioned index against the
+    // O(seen)-shuffle anti-join: both reproduce the oracle exactly
+    guardCrawl(stored = false, index = true)
+    guardCrawl(stored = false, index = false)
+  }
+
+  test("exact seen index: multi-seed unbounded-budget BFS (q30's config class)") {
+    // storeless with the index: FIFO-index counts, frontier checkpoint and
+    // index add per round (the last round, which takes nothing, runs only
+    // the counts), plus the 2-job index build
+    val oracle = CrawlOracle.run(seeds(0, 1, 2, 3),
       CrawlOracle.Config(2, 300, Int.MaxValue, true, true, web))
-    val q30 = FrontierEngine.Config(2, 300, Int.MaxValue, true, true, 4, web,
+    val ecfg = FrontierEngine.Config(2, 300, Int.MaxValue, true, true, 4, web,
       exactSeenIndex = true)
-    val ((fetched, seen), jobs) =
-      graft.SparkJobs.count(sc)(FrontierEngine.crawl(spark, seeds(0, 1, 2, 3), q30))
+    val ((fetched, seen), jobs) = graft.SparkJobs.count(spark.sparkContext)(
+      FrontierEngine.crawl(spark, seeds(0, 1, 2, 3), ecfg))
     val rounds = FrontierEngine.lastSeenModeLog.size
+    assert(engineRows(fetched).toSeq == oracleRows(oracle))
+    assert(seen.count() == oracle.seen.size)
     assert(jobs <= 3 * rounds + 2, s"$jobs jobs over $rounds storeless rounds")
-    assert(engineRows(fetched).toSeq == oracleRows(oracle30))
-    assert(seen.count() == oracle30.seen.size)
+  }
+
+  test("store-backed index crawl: Spark jobs per committed round stay pinned") {
+    // 23 jobs over 4 committed rounds, the index build included. A second
+    // seen table, a schema-inferring read-back or an eager probe
+    // checkpoint would each add one job per round.
+    val (jobs, store) = guardCrawl(stored = true, index = true)
+    assert(jobs <= 6 * store.get.currentRound.get, s"$jobs jobs")
+    // the store-backed anti-join path matches and releases its caches too
+    guardCrawl(stored = true, index = false)
   }
 }
