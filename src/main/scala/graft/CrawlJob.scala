@@ -13,9 +13,12 @@ import graft.engine.{FrontierEngine, SnapshotStore, SyntheticWeb}
   * The master/executor topology comes from spark-submit (no .master() here;
   * local runs fall back to local[*]). Every round commits deltas +
   * per-partition lineage to the SnapshotStore; re-running the same command
-  * resumes from the last committed round. Fetching is the deterministic
-  * SyntheticWeb resolver in this sandbox (zero egress) — on a real cluster
-  * the fetch closure is the only seam to swap for an HTTP client.
+  * resumes from the last committed round. Seen membership uses the
+  * resident exact index unless `--exact-seen-index false` picks the
+  * anti-join; the JSON result line reports the mode as `seen_mode`.
+  * Fetching is the deterministic SyntheticWeb resolver (zero egress) — on
+  * a real cluster the fetch closure is the only seam to swap for an HTTP
+  * client.
   */
 object CrawlJob {
 
@@ -49,14 +52,13 @@ object CrawlJob {
       respectRobots = true,
       saltBuckets = a.getOrElse("salt-buckets", "8").toInt,
       web = web,
-      // membership mode: --exact-seen-index forces the resident O(delta)
-      // index from round 0; otherwise the crawl AUTO-switches to it once
-      // the seen set crosses --auto-seen-index-at URLs (the measured
-      // anti-join/index crossover, BASELINE.md seen_membership; -1
-      // disables). With --store the index persists as a durable sidecar
-      // and resume reloads it with zero shuffle.
-      exactSeenIndex = a.getOrElse("exact-seen-index", "false").toBoolean,
-      autoSeenIndexAt = a.getOrElse("auto-seen-index-at", "16000000").toLong)
+      // membership mode for the whole crawl: the resident O(delta) index by
+      // default, since this entrypoint is the one meant for 10^10-URL
+      // crawls, where the anti-join re-shuffles the whole seen set every
+      // round; `--exact-seen-index false` picks the anti-join. With --store
+      // the index persists as a durable sidecar and resume reloads it with
+      // zero shuffle.
+      exactSeenIndex = a.getOrElse("exact-seen-index", "true").toBoolean)
     val seeds = a.get("seeds").map(_.split(",").toSeq)
       .getOrElse((0 until 8).map(h => SyntheticWeb.pageUrl(h, 0)))
     val store = a.get("store").map(new SnapshotStore(_))
@@ -68,6 +70,7 @@ object CrawlJob {
     val secs = (System.nanoTime() - t0) / 1e9
     println(f"""{"fetched":$nFetched,"seen":$nSeen,"wall_sec":$secs%.1f,""" +
       f""""pages_per_sec":${(nFetched / secs).round},""" +
+      s""""seen_mode":"${if (cfg.exactSeenIndex) "index" else "anti"}",""" +
       s""""resumed_round":${store.flatMap(_.currentRound).getOrElse(0)}}""")
     spark.stop()
   }

@@ -19,7 +19,8 @@ import graft.core.{Extract, Robots, UrlNorm}
   *    its 64-bit xxh64 hash is in `fetched`. Membership is tested exactly,
   *    either by an anti-join against `fetched.url_hash` or by probing the
   *    resident [[SeenIndex]], which is maintained from each round's fetch
-  *    delta.
+  *    delta. `Config.exactSeenIndex` picks one of the two for the whole
+  *    crawl.
   *  - the politeness budget is enforced BEFORE the salted repartition by a
   *    window over the host key (rank ≤ B), so a mega-host never serializes
   *    a partition: its per-round work is bounded by B and spread over
@@ -73,21 +74,10 @@ object FrontierEngine {
         * anti-join's O(seen) full-table shuffle, the dominant recurring
         * cost of a long crawl. Results are byte-identical (identity is the
         * 64-bit hash either way; CrawlSpec pins order/seen-set/text
-        * equality vs the scalar oracle with the index on). */
-      exactSeenIndex: Boolean = false,
-      /** AUTO mode selection for seen membership: when ≥ 0 and
-        * `exactSeenIndex` is off, the crawl starts on the plain anti-join
-        * and switches to the resident index once the seen set crosses
-        * this many URLs — the measured crossover where the per-round
-        * O(seen) anti-join shuffle overtakes the index's one-time build
-        * (BASELINE.md seen_membership: index probe wins decisively by
-        * 32M seen; the default sits a factor below that so the one-time
-        * build amortizes over the remaining rounds). Results are
-        * byte-identical across the switch (identity is the 64-bit hash
-        * in both modes; CrawlSpec pins it). -1 disables; ON by default —
-        * no sandbox-scale crawl reaches it, and a 10^10-URL crawl should
-        * not need a hand flag to stop re-shuffling its seen set. */
-      autoSeenIndexAt: Long = 16000000L)
+        * equality vs the scalar oracle with the index on). The mode holds
+        * for the whole crawl: the index is built once, at crawl start, from
+        * the fresh or resumed state. */
+      exactSeenIndex: Boolean = false)
 
   final case class RoundResult(
       fetched: DataFrame, // FetchedRow sans links
@@ -96,7 +86,10 @@ object FrontierEngine {
       /** release the ranked frontier and the FIFO index's sorted cache —
         * call AFTER newFrontier and fetched are materialized (checkpoint/
         * commit). The fetched cache stays: later rounds union it. */
-      cleanup: () => Unit = () => ())
+      cleanup: () => Unit = () => (),
+      /** release the cached fetch delta — call once nothing reads `fetched`
+        * (a plan collapse replaced it). */
+      releaseFetched: () => Unit = () => ())
 
   def seedFrontier(spark: SparkSession, seeds: Seq[String]): Dataset[FrontierRow] = {
     import spark.implicits._
@@ -109,11 +102,12 @@ object FrontierEngine {
     * fetch log); a frontier URL is seen iff its `url_hash` is in it, and
     * its row count is `fetchedSoFar`, which also drives the global maxPages
     * cap. When `seenIdx` is given, membership probes that resident index
-    * and `fetched` is not read at all this round. */
+    * and `fetched` is not read at all this round. `frontierEst` is an
+    * order-of-magnitude estimate of the frontier's row count; it sizes the
+    * FIFO index's range partitions and never changes the result. */
   def round(spark: SparkSession, frontier: Dataset[FrontierRow],
-      fetched: DataFrame, roundNo: Int, fetchedSoFar: Long,
-      cfg: Config, seenIdx: Option[SeenIndex] = None,
-      frontierEst: Long = -1L): RoundResult = {
+      fetched: DataFrame, roundNo: Int, fetchedSoFar: Long, frontierEst: Long,
+      cfg: Config, seenIdx: Option[SeenIndex] = None): RoundResult = {
     import spark.implicits._
 
     // 1. within-frontier dedupe: first discovery (min FIFO seq) wins.
@@ -151,7 +145,7 @@ object FrontierEngine {
         // static planner (and the small-round mode with AQE off) would
         // otherwise pick a sort-merge anti join for a few-hundred-row table
         // (guide §3.1: pick the strategy deliberately). Past the threshold
-        // the planner decides; the auto seen-index takes over at 16M anyway.
+        // the planner decides; a crawl that large should run on the index.
         val seenKeys = fetched.select("url_hash")
         val rhs = if (fetchedSoFar <= 2000000L) broadcast(seenKeys) else seenKeys
         deduped.join(rhs, Seq("url_hash"), "left_anti")
@@ -257,16 +251,12 @@ object FrontierEngine {
       fetched = fetchedCached.drop("links"),
       newFrontier = deferredByBudget.union(overflow).union(children),
       taken = takenCount,
-      cleanup = () => { ranked.unpersist(false); sortedCached.unpersist(false); () })
+      cleanup = () => { ranked.unpersist(false); sortedCached.unpersist(false); () },
+      releaseFetched = () => { fetchedCached.unpersist(false); () })
   }
 
   /** Union-plan collapse interval for iterative crawls (see [[crawl]]). */
-  private val planCollapseEvery = 8
-
-  /** Per-round seen-membership mode decisions of the most recent [[crawl]]
-    * ((round, "anti"|"index"|"switch_to_index@N")) — diagnostic,
-    * CrawlSpec asserts the auto-switch fires at its threshold. */
-  @volatile var lastSeenModeLog: List[(Int, String)] = Nil
+  private[engine] val planCollapseEvery = 8
 
   private val frontierCols = Seq(
     col("url"), col("url_hash"), col("host"), col("depth"),
@@ -294,21 +284,18 @@ object FrontierEngine {
     * per-row `Row.fromSeq(row.toSeq :+ v)` — the generic path allocated a
     * Seq copy + object Row per row, the round-1 lesson's 32-thread scaling
     * killer (BASELINE.md). */
-  def withGlobalFifoIndexCounted(spark: SparkSession, df: DataFrame,
-      startAt: Long, estRows: Long = -1L): (DataFrame, Long, Dataset[FrontierRow]) = {
+  private def withGlobalFifoIndexCounted(spark: SparkSession, df: DataFrame,
+      startAt: Long, estRows: Long): (DataFrame, Long, Dataset[FrontierRow]) = {
     import spark.implicits._
-    // scale-adaptive partition count (guide §2.2): with a caller-supplied
-    // row estimate, size range partitions at ~1M FrontierRows (~150 MB)
+    // scale-adaptive partition count (guide §2.2): from the caller's row
+    // estimate, size range partitions at ~1M FrontierRows (~150 MB)
     // instead of a constant fan. The big win is small frontiers: at
     // parts == 1 the RangePartitioner computes NO bounds, so the sampling
     // pass — a whole extra Spark job executing the dedupe→anti-join→window
     // pipeline per round — disappears. order_idx is a prefix sum over the
     // sorted ranges, so the result is identical at any partition count.
     val dp = spark.sparkContext.defaultParallelism
-    val parts =
-      if (estRows >= 0)
-        math.max(1L, math.min(estRows / (1L << 20) + 1, dp.toLong * 4)).toInt
-      else math.max(1, dp / 2)
+    val parts = math.max(1L, math.min(estRows / (1L << 20) + 1, dp.toLong * 4)).toInt
     val sorted = df.select(frontierCols: _*).as[FrontierRow]
       .repartitionByRange(parts, col("parent_order"), col("link_pos"), col("url_hash"))
       .sortWithinPartitions(col("parent_order"), col("link_pos"), col("url_hash"))
@@ -342,8 +329,9 @@ object FrontierEngine {
   /** Drive a full crawl from seeds; returns (all fetched rows, final seen
     * set as (url_hash, url) — a projection of the fetched rows). When
     * `store` is given, every round commits deltas + lineage and the crawl
-    * can resume from the latest snapshot. Only the cached per-round fetch
-    * deltas outlive the call, and the returned frames read them: they are
+    * can resume from the latest snapshot. Only the cached fetch deltas of
+    * the rounds since the last plan collapse (and, storeless, the collapsed
+    * leaf) outlive the call, and the returned frames read them: they are
     * valid until the caller clears the cache (they cannot be recomputed). */
   def crawl(spark: SparkSession, seeds: Seq[String], cfg: Config,
       store: Option[SnapshotStore] = None): (DataFrame, DataFrame) = {
@@ -352,15 +340,12 @@ object FrontierEngine {
     // (only order-of-magnitude accuracy is needed; see
     // withGlobalFifoIndexCounted). Seeded exactly, then advanced per round
     // with a deliberate over-estimate of the child fan-out.
-    var frontierEst: Long = -1L
-    var state = store.flatMap(_.loadLatest(spark)) match {
-      case Some(s) =>
-        // one cheap metadata-driven parquet count per RESUME (not per round)
-        frontierEst = s.frontier.count()
-        s
+    var (state, frontierEst) = store.flatMap(_.loadLatest(spark)) match {
+      // one cheap metadata-driven parquet count per RESUME (not per round)
+      case Some(s) => (s, s.frontier.count())
       case None =>
-        frontierEst = seeds.size.toLong
-        CrawlState(seedFrontier(spark, seeds).toDF(), emptyFetched(spark), 0, 0L)
+        (CrawlState(seedFrontier(spark, seeds).toDF(), emptyFetched(spark), 0, 0L),
+          seeds.size.toLong)
     }
     // resident exact seen index. With a store, the durable sidecar
     // ([[SeenIndexStore]]) is preferred: load is a zero-shuffle per-bucket
@@ -427,7 +412,6 @@ object FrontierEngine {
         case None => SeenIndex.fromSeen(spark, seenHashes, bucketsIfNew)
       }
     }
-    val modeLog = scala.collection.mutable.ArrayBuffer[(Int, String)]()
     // --- small-round fast path (guide §1.2/§2.2) -----------------------
     // While a round's working set (frontier estimate and seen set) is
     // small, every stage holds a few thousand rows per task at cluster
@@ -443,7 +427,7 @@ object FrontierEngine {
     val smallRoundMax = 2000000L
     def scaleRoundConfs(): Unit = {
       val est = math.max(frontierEst, state.fetchedCount)
-      if (est >= 0 && est < smallRoundMax) {
+      if (est < smallRoundMax) {
         spark.conf.set("spark.sql.adaptive.enabled", "false")
         spark.conf.set("spark.sql.shuffle.partitions",
           math.max(8L, est / (64L << 10)).toString)
@@ -452,28 +436,25 @@ object FrontierEngine {
         spark.conf.set("spark.sql.shuffle.partitions", prevShuf)
       }
     }
+    // the seen-membership mode is fixed for the whole crawl
     var seenIdx: Option[SeenIndex] =
       if (cfg.exactSeenIndex) Some(buildIndex(state)) else None
+    // the fetch log is `fetchedBase` (the empty seed table, a store read or
+    // a collapsed leaf) unioned with the cached fetch deltas of the rounds
+    // since; `releaseDeltas` frees those deltas
+    var fetchedBase = state.fetched
+    val releaseDeltas = scala.collection.mutable.ArrayBuffer[() => Unit]()
     var continue = state.fetchedCount < cfg.maxPages
     // try/finally: a throw anywhere in the loop (e.g. CommitConflictException
     // from a losing OCC writer) must still release the resident index, the
     // frontier leaf and the current round's transient caches
     try while (continue) {
       scaleRoundConfs()
-      // auto mode selection: once the seen set crosses the configured
-      // crossover, stop paying the O(seen) anti-join shuffle per round
-      // and go resident (decision logged per crawl in lastSeenModeLog)
-      if (seenIdx.isEmpty && cfg.autoSeenIndexAt >= 0 &&
-          state.fetchedCount >= cfg.autoSeenIndexAt) {
-        seenIdx = Some(buildIndex(state))
-        modeLog += ((state.round, s"switch_to_index@${state.fetchedCount}"))
-      }
-      modeLog += ((state.round, if (seenIdx.isDefined) "index" else "anti"))
       // no isEmpty pre-check: an empty frontier yields taken == 0 in the
       // round itself — the pre-check was one extra Spark job per round
       val fr = state.frontier.as[FrontierRow]
-      val r = round(spark, fr, state.fetched, state.round, state.fetchedCount, cfg,
-        seenIdx, frontierEst)
+      val r = round(spark, fr, state.fetched, state.round, state.fetchedCount,
+        frontierEst, cfg, seenIdx)
       try if (r.taken == 0) continue = false
       else {
         // The round's outputs are materialized exactly ONCE, and the
@@ -530,20 +511,26 @@ object FrontierEngine {
         // snapshot (a flat multi-path parquet scan); without one, cut the
         // union into a single materialized leaf. O(seen) cost amortized
         // over K rounds; plan size now O(K), independent of crawl length.
+        // Once the collapse has materialized, nothing reads the replaced
+        // deltas or, storeless, the previous collapsed leaf: release them,
+        // so the cache holds at most K deltas and one leaf.
+        releaseDeltas += r.releaseFetched
         if (newState.round % planCollapseEvery == 0) {
           newState = store.flatMap(_.loadLatest(spark)) match {
             case Some(s) => s
             case None => newState.copy(fetched = newState.fetched.localCheckpoint(true))
           }
+          releaseLeaf(fetchedBase)
+          releaseDeltas.foreach(_())
+          releaseDeltas.clear()
+          fetchedBase = newState.fetched
         }
         state = newState
         // next frontier ≤ carried-over rows + children; bound the child
         // fan-out generously (each link slot can emit a couple of forms) —
         // the estimate only picks a partition-count order of magnitude
-        frontierEst =
-          if (frontierEst < 0) -1L
-          else math.max(0L, frontierEst - r.taken) +
-            r.taken * math.max(8L, 4L * cfg.web.linksPerPage)
+        frontierEst = math.max(0L, frontierEst - r.taken) +
+          r.taken * math.max(8L, 4L * cfg.web.linksPerPage)
         if (state.fetchedCount >= cfg.maxPages) continue = false
         if (state.round >= cfg.maxRounds) continue = false
       }
@@ -557,7 +544,6 @@ object FrontierEngine {
       spark.conf.set("spark.sql.shuffle.partitions", prevShuf)
       seenIdx.foreach(_.release())
       releaseLeaf(state.frontier)
-      lastSeenModeLog = modeLog.toList
     }
     (state.fetched, state.fetched.select("url_hash", "url"))
   }
@@ -565,8 +551,9 @@ object FrontierEngine {
   def emptyFetched(spark: SparkSession): DataFrame =
     spark.createDataFrame(java.util.List.of[Row](), SnapshotStore.FetchLogSchema)
 
-  /** Unpersist a storeless round's checkpointed frontier leaf; a no-op for
-    * any other frame (the seed frontier, a committed parquet read). */
+  /** Unpersist a storeless checkpointed leaf (a round's frontier or a
+    * collapsed fetch log); a no-op for any other frame (the seed frontier,
+    * the empty seed fetch log, a committed parquet read). */
   private def releaseLeaf(frontier: DataFrame): Unit =
     frontier.queryExecution.logical match {
       case leaf: LogicalRDD => leaf.rdd.unpersist(false)
