@@ -62,6 +62,7 @@ object CrawlJob {
     val seeds = a.get("seeds").map(_.split(",").toSeq)
       .getOrElse((0 until 8).map(h => SyntheticWeb.pageUrl(h, 0)))
     val store = a.get("store").map(new SnapshotStore(_))
+    val resumedRound = store.flatMap(_.currentRound).getOrElse(0)
 
     val t0 = System.nanoTime()
     val (fetched, seen) = FrontierEngine.crawl(spark, seeds, cfg, store)
@@ -71,7 +72,7 @@ object CrawlJob {
     println(f"""{"fetched":$nFetched,"seen":$nSeen,"wall_sec":$secs%.1f,""" +
       f""""pages_per_sec":${(nFetched / secs).round},""" +
       s""""seen_mode":"${if (cfg.exactSeenIndex) "index" else "anti"}",""" +
-      s""""resumed_round":${store.flatMap(_.currentRound).getOrElse(0)}}""")
+      s""""resumed_round":$resumedRound}""")
     spark.stop()
   }
 }

@@ -29,8 +29,8 @@ import graft.core.{Extract, Robots, UrlNorm}
   *    window: range-partition by the FIFO key, count rows per partition,
   *    broadcast the prefix offsets, add the local rank (two narrow passes).
   *  - every round commits its fetch_log delta, the next frontier and
-  *    per-partition lineage to a [[SnapshotStore]]; `resume` restarts from
-  *    the latest manifest.
+  *    per-partition lineage to a [[SnapshotStore]]; a crawl on a store
+  *    that holds rounds resumes from the highest committed one.
   */
 object FrontierEngine {
 
@@ -328,11 +328,12 @@ object FrontierEngine {
 
   /** Drive a full crawl from seeds; returns (all fetched rows, final seen
     * set as (url_hash, url) — a projection of the fetched rows). When
-    * `store` is given, every round commits deltas + lineage and the crawl
-    * can resume from the latest snapshot. Only the cached fetch deltas of
-    * the rounds since the last plan collapse (and, storeless, the collapsed
-    * leaf) outlive the call, and the returned frames read them: they are
-    * valid until the caller clears the cache (they cannot be recomputed). */
+    * `store` is given, every round commits deltas + lineage, and a crawl
+    * on a store that holds rounds resumes from the highest committed one.
+    * Only the cached fetch deltas of the rounds since the last plan
+    * collapse (and, storeless, the collapsed leaf) outlive the call, and
+    * the returned frames read them: they are valid until the caller clears
+    * the cache (they cannot be recomputed). */
   def crawl(spark: SparkSession, seeds: Seq[String], cfg: Config,
       store: Option[SnapshotStore] = None): (DataFrame, DataFrame) = {
     import spark.implicits._
@@ -346,71 +347,6 @@ object FrontierEngine {
       case None =>
         (CrawlState(seedFrontier(spark, seeds).toDF(), emptyFetched(spark), 0, 0L),
           seeds.size.toLong)
-    }
-    // resident exact seen index. With a store, the durable sidecar
-    // ([[SeenIndexStore]]) is preferred: load is a zero-shuffle per-bucket
-    // file read + an O(missed deltas) top-up, NOT the O(seen) shuffle+sort
-    // of fromSeen — which remains the storeless / no-sidecar fallback (and
-    // then seeds the sidecar so the NEXT resume loads).
-    def buildIndex(st8: CrawlState): SeenIndex = {
-      val bucketsIfNew =
-        SeenIndex.bucketsFor(spark, math.max(st8.fetchedCount, cfg.maxPages))
-      val seenHashes = st8.fetched.select("url_hash")
-      // full rebuild from the committed fetch log, wiping the sidecar
-      // first: once we're here the dir's files are either absent or
-      // untrustworthy (foreign/rolled-back timeline), and writeRun's
-      // exists-skip must not keep any of them over the rebuild's writes
-      def rebuild(st: SnapshotStore): SeenIndex = {
-        SeenIndexStore.wipe(st.indexDir)
-        val idx = SeenIndex.fromSeen(spark, seenHashes, bucketsIfNew,
-          Some(SeenIndexStore.Sink(st.indexDir, st8.round)))
-        SeenIndexStore.writeManifest(st.indexDir, idx.buckets, st8.round)
-        idx
-      }
-      store match {
-        case Some(st) =>
-          SeenIndexStore.load(spark, st.indexDir, st8.round) match {
-            case Some((idx0, idxRound)) =>
-              // run files AHEAD of the committed store round belong to an
-              // abandoned timeline: delete them now, or the exists-skip
-              // would keep their stale content when this crawl re-reaches
-              // those rounds (files in (idxRound, round] are same-timeline
-              // derivations of committed deltas and stay)
-              SeenIndexStore.invalidateAhead(st.indexDir, st8.round)
-              var idx = idx0
-              ((idxRound + 1) to st8.round).foreach { k =>
-                st.fetchLogPath(k).foreach { p =>
-                  // idempotent add: after snapshot expiry the compacted
-                  // keepRound delta holds the union of expired rounds —
-                  // already-resident hashes are dropped bucket-locally.
-                  // Only url_hash is selected, so parquet skips the text.
-                  idx = SeenIndex.add(idx, st.readFetchLog(spark, Seq(p)).select("url_hash"),
-                    Some(SeenIndexStore.Sink(st.indexDir, k)))
-                }
-              }
-              if (st8.round > idxRound) {
-                SeenIndexStore.writeManifest(st.indexDir, idx.buckets, st8.round)
-                SeenIndexStore.gc(st.indexDir, st8.round)
-              }
-              // integrity cross-check (idx.count is maintained exactly;
-              // the fetch log side is one count job — valid because the
-              // fetch log is unique BY HASH by construction: membership is
-              // tested on url_hash, so a colliding url is classified seen
-              // and never fetched, and plain count == distinct-hash count
-              // at any scale): a missing or truncated
-              // run file SHRINKS membership silently instead of failing —
-              // on mismatch, fall back to the fromSeen rebuild. A false
-              // positive only costs the rebuild; a false negative would
-              // re-fetch/re-emit pages, so the check is deliberately
-              // conservative
-              if (idx.count != st8.fetched.count()) {
-                idx.release()
-                rebuild(st)
-              } else idx
-            case None => rebuild(st)
-          }
-        case None => SeenIndex.fromSeen(spark, seenHashes, bucketsIfNew)
-      }
     }
     // --- small-round fast path (guide §1.2/§2.2) -----------------------
     // While a round's working set (frontier estimate and seen set) is
@@ -436,9 +372,14 @@ object FrontierEngine {
         spark.conf.set("spark.sql.shuffle.partitions", prevShuf)
       }
     }
-    // the seen-membership mode is fixed for the whole crawl
-    var seenIdx: Option[SeenIndex] =
-      if (cfg.exactSeenIndex) Some(buildIndex(state)) else None
+    // the seen-membership mode is fixed for the whole crawl; the resident
+    // index is built once, here — with a store by [[SeenIndexStore.open]]
+    // (the durable sidecar), storeless from the empty seed fetch log
+    var seenIdx: Option[SeenIndex] = Option.when(cfg.exactSeenIndex) {
+      val buckets = SeenIndex.bucketsFor(spark, math.max(state.fetchedCount, cfg.maxPages))
+      store.fold(SeenIndex.fromSeen(spark, state.fetched.select("url_hash"), buckets))(
+        SeenIndexStore.open(spark, _, state, buckets))
+    }
     // the fetch log is `fetchedBase` (the empty seed table, a store read or
     // a collapsed leaf) unioned with the cached fetch deltas of the rounds
     // since; `releaseDeltas` frees those deltas
@@ -490,19 +431,14 @@ object FrontierEngine {
         // O(delta) index maintenance (invalidates the previous index),
         // fed from the round's cached fetch delta. The round's lazy probe
         // reads the previous index: `ranked`, the fetch delta and the next
-        // frontier are all materialized above. With a store, the round's
-        // run events persist into the sidecar DURING the add's
-        // materialization, and the index manifest advances only after the
-        // snapshot commit above succeeded — so the sidecar can never claim
-        // rounds the table doesn't have.
+        // frontier are all materialized above. With a store,
+        // [[SeenIndexStore.advance]] runs only after the snapshot commit
+        // above succeeded, so the sidecar never claims a round the table
+        // doesn't have.
         seenIdx = seenIdx.map { idx =>
-          val sink = store.map(st => SeenIndexStore.Sink(st.indexDir, newState.round))
-          val next = SeenIndex.add(idx, r.fetched.select("url_hash"), sink)
-          store.foreach { st =>
-            SeenIndexStore.writeManifest(st.indexDir, next.buckets, newState.round)
-            SeenIndexStore.gc(st.indexDir, newState.round)
-          }
-          next
+          val delta = r.fetched.select("url_hash")
+          store.fold(SeenIndex.add(idx, delta))(
+            SeenIndexStore.advance(_, idx, delta, newState.round))
         }
         // the cached per-round deltas keep LINEAGE flat, but the union
         // TREE itself still deepens one node per round — a 10^4-round crawl

@@ -81,16 +81,12 @@ object SeenIndex {
     math.max(math.max(1L, minB), needed).toInt
   }
 
-  def empty(spark: SparkSession, buckets: Int): SeenIndex = {
-    val part = new HashPartitioner(buckets)
-    val rdd = spark.sparkContext
+  /** An index with no hashes. Lazy: the first [[add]] materializes it in
+    * the same job as its own runs. */
+  def empty(spark: SparkSession, buckets: Int): SeenIndex =
+    new SeenIndex(buckets, spark.sparkContext
       .parallelize((0 until buckets).map(b => (b, Array.empty[Array[Long]])), buckets)
-      .partitionBy(part)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    rdd.localCheckpoint()
-    rdd.count()
-    new SeenIndex(buckets, rdd, 0L)
-  }
+      .partitionBy(new HashPartitioner(buckets)), 0L)
 
   /** Rebuild from the seen hashes (the fetch log's `url_hash` column;
     * resume path / first use). With `sink` set the rebuilt buckets are also
@@ -100,15 +96,14 @@ object SeenIndex {
       sink: Option[SeenIndexStore.Sink] = None): SeenIndex =
     add(empty(spark, buckets), seen, sink)
 
-  /** Adopt an already-bucket-partitioned runs RDD (the durable-load path:
-    * partition i must hold exactly bucket i's entry). */
-  private[engine] def fromLoadedRuns(spark: SparkSession, buckets: Int,
+  /** Adopt a runs RDD whose partition i holds exactly bucket i's entry:
+    * persist, truncate the lineage and materialize in ONE job, whose fold
+    * yields the exact resident count. */
+  private[engine] def fromRuns(buckets: Int,
       runs: RDD[(Int, Array[Array[Long]])]): SeenIndex = {
-    val persisted = runs.persist(StorageLevel.MEMORY_AND_DISK)
-    persisted.localCheckpoint()
-    val resident = persisted
-      .map { case (_, rs) => rs.map(_.length.toLong).sum }.fold(0L)(_ + _)
-    new SeenIndex(buckets, persisted, resident)
+    runs.persist(StorageLevel.MEMORY_AND_DISK).localCheckpoint()
+    val resident = runs.map { case (_, rs) => rs.map(_.length.toLong).sum }.fold(0L)(_ + _)
+    new SeenIndex(buckets, runs, resident)
   }
 
   /** Merge a round's delta (`url_hash` column) into the index: shuffles
@@ -164,15 +159,10 @@ object SeenIndex {
             }
           }
         }
-    }.persist(StorageLevel.MEMORY_AND_DISK)
-    // truncate the per-round lineage chain: unchanged runs stay shared on
-    // heap (deserialized blocks hold references, not copies); the resident
-    // fold doubles as the materializing action and yields the exact count
-    newRuns.localCheckpoint()
-    val resident = newRuns
-      .map { case (_, rs) => rs.map(_.length.toLong).sum }.fold(0L)(_ + _)
+    }
+    val next = fromRuns(b, newRuns)
     idx.runs.unpersist(false)
-    new SeenIndex(b, newRuns, resident)
+    next
   }
 
   /** The candidates whose `url_hash` is NOT in the index — the index-backed

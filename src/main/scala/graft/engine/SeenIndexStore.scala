@@ -2,7 +2,7 @@ package graft.engine
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path => HPath}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Durable sidecar for [[SeenIndex]]: per-bucket sorted-run files under the
   * snapshot root (`<root>/seen_index/`), so a restarted crawl reloads the
@@ -28,13 +28,18 @@ import org.apache.spark.sql.SparkSession
   * `parallelize(buckets) → mapPartitionsWithIndex(read own files)`: the
   * only thing that ever moves between nodes is bucket IDs, never hashes.
   *
+  * The crawl drives the sidecar through two calls, and nothing else
+  * writes it: [[open]] once per store-backed crawl, on the fresh or
+  * resumed state, and [[advance]] once per committed round, right after
+  * the round's snapshot commit.
+  *
   * Crash safety: run files are written task-side (temp + rename,
   * idempotent under retry) during `SeenIndex.add`'s materialization; the
-  * manifest advances AFTER, and the crawl writes it only after the round's
-  * snapshot commit. So the manifest round is always ≤ the store's
-  * committed round, and a crash between commit and index persist just
-  * means resume tops up the few missed rounds from the `url_hash` column
-  * of their committed `fetch_log/` deltas (O(missed deltas)).
+  * manifest advances AFTER, and only after the round's snapshot commit.
+  * So the manifest round is always ≤ the store's committed round, and a
+  * crash between commit and index persist just means [[open]] tops up the
+  * few missed rounds from the `url_hash` column of their committed
+  * `fetch_log/` deltas (O(missed deltas)).
   *
   * Writes use the Hadoop FileSystem API (local fs here, HDFS/S3A on a
   * cluster). Write amplification is the in-memory structure's: one
@@ -102,13 +107,13 @@ object SeenIndexStore {
     } finally in.close()
   }
 
-  /** Advance the index commit marker (atomic replace, `_current` style).
-    * Call only after the round's run files are materialized AND the
-    * round's snapshot is committed. Uses FileContext.rename(OVERWRITE) —
+  /** Advance the index commit marker (atomic replace). Call only after the
+    * round's run files are materialized AND the round's snapshot is
+    * committed. Uses FileContext.rename(OVERWRITE) —
     * posix rename locally, the namenode's atomic rename on HDFS — so
     * there is never a window with no manifest (FileSystem.rename cannot
     * overwrite and would force delete-then-rename). */
-  def writeManifest(dir: String, buckets: Int, round: Int): Unit = {
+  private[engine] def writeManifest(dir: String, buckets: Int, round: Int): Unit = {
     val f = fs(dir)
     f.mkdirs(new HPath(dir))
     val tmp = new HPath(dir, s".manifest_${java.util.UUID.randomUUID().toString.take(8)}")
@@ -136,11 +141,11 @@ object SeenIndexStore {
     * that raced a still-live writer here could delete that writer's
     * just-written ahead-of-round files; after the writer commits, the
     * sidecar would under-count until the next resume's seen-count
-    * cross-check forces a full rebuild (self-healing via
-    * [[graft.engine.FrontierEngine]]'s count-integrity fallback, but an
-    * avoidable O(seen) rebuild). Concurrent drivers on one root are
-    * outside the design: a resume means the previous driver is dead. */
-  def invalidateAhead(dir: String, round: Int): Unit = {
+    * cross-check forces a full rebuild (self-healing via [[open]]'s
+    * count cross-check, but an avoidable O(seen) rebuild). Concurrent
+    * drivers on one root are outside the design: a resume means the
+    * previous driver is dead. */
+  private[engine] def invalidateAhead(dir: String, round: Int): Unit = {
     val f = fs(dir)
     listRunFiles(dir).filter(_._2 > round)
       .foreach(e => f.delete(new HPath(dir, e._4), false))
@@ -151,7 +156,7 @@ object SeenIndexStore {
     * committed, EVERY file in the dir is suspect — including ones at
     * rounds ≤ current, whose foreign content the exists-skip would
     * otherwise keep over the rebuild's writes. */
-  def wipe(dir: String): Unit = {
+  private[engine] def wipe(dir: String): Unit = {
     val f = fs(dir)
     if (f.exists(new HPath(dir))) {
       listRunFiles(dir).foreach(e => f.delete(new HPath(dir, e._4), false))
@@ -160,7 +165,7 @@ object SeenIndexStore {
     }
   }
 
-  def readManifest(dir: String): Option[(Int, Int)] = {
+  private[engine] def readManifest(dir: String): Option[(Int, Int)] = {
     val f = fs(dir)
     val p = new HPath(dir, "manifest.json")
     if (!f.exists(p)) None
@@ -201,7 +206,7 @@ object SeenIndexStore {
   /** Remove run files superseded by a newer base at or before `round`
     * (driver-side; file count is O(buckets · MaxRuns)). Never touches
     * files newer than `round` — they may belong to a commit in flight. */
-  def gc(dir: String, round: Int): Unit = {
+  private[engine] def gc(dir: String, round: Int): Unit = {
     val f = fs(dir)
     listRunFiles(dir).filter(_._2 <= round).groupBy(_._1).foreach { case (_, fsB) =>
       fsB.filter(_._3).map(_._2).maxOption.foreach { baseRound =>
@@ -215,7 +220,7 @@ object SeenIndexStore {
     * store's committed `storeRound` — the crawl's write ordering
     * guarantees it; a violation means a foreign/corrupt sidecar and falls
     * back to None → rebuild). Returns the index and the round it
-    * represents; the caller tops up rounds (idxRound, storeRound] from
+    * represents; [[open]] tops up rounds (idxRound, storeRound] from
     * the committed fetch_log deltas. The load moves ONLY bucket IDs across the
     * cluster: each partition reads its own bucket's files. */
   def load(spark: SparkSession, dir: String, storeRound: Int)
@@ -234,6 +239,58 @@ object SeenIndexStore {
           }
         }
       lastLoadLineage = runs.toDebugString
-      (SeenIndex.fromLoadedRuns(spark, buckets, runs), idxRound)
+      (SeenIndex.fromRuns(buckets, runs), idxRound)
     }
+
+  /** The crawl's resident index at the committed `state` of `store`: the
+    * loaded sidecar, topped up to `state.round`, or — with no usable
+    * sidecar — an O(seen) rebuild into `buckets` buckets from the fetch
+    * log that re-seeds the sidecar, so the NEXT resume loads. */
+  def open(spark: SparkSession, store: SnapshotStore,
+      state: FrontierEngine.CrawlState, buckets: Int): SeenIndex = {
+    val dir = store.indexDir
+    // wipe first: the dir's files are absent or untrustworthy, and
+    // writeRun's exists-skip must not keep any over the rebuild's writes
+    def rebuild(): SeenIndex = {
+      wipe(dir)
+      val idx = SeenIndex.fromSeen(spark, state.fetched.select("url_hash"), buckets,
+        Some(Sink(dir, state.round)))
+      writeManifest(dir, idx.buckets, state.round)
+      idx
+    }
+    load(spark, dir, state.round).map { case (loaded, idxRound) =>
+      // run files AHEAD of the committed round belong to an abandoned
+      // timeline: delete them now, or the exists-skip would keep their
+      // stale content when this crawl re-reaches those rounds (files in
+      // (idxRound, round] are same-timeline derivations of committed
+      // deltas and stay)
+      invalidateAhead(dir, state.round)
+      // top up the missed rounds. The add is idempotent: after expiry the
+      // compacted keepRound delta holds the union of expired rounds.
+      val idx = ((idxRound + 1) to state.round).foldLeft(loaded) { (ix, k) =>
+        store.fetchLogPath(k).fold(ix)(p =>
+          advance(store, ix, store.readFetchLog(spark, Seq(p)).select("url_hash"), k))
+      }
+      // integrity cross-check: idx.count is maintained exactly, and the
+      // committed fetched_count is the fetch log's row count, which is its
+      // distinct-hash count (membership is tested on url_hash, so a
+      // colliding url is classified seen and never fetched). A missing or
+      // truncated run file SHRINKS membership silently instead of failing,
+      // so a mismatch rebuilds. A false positive only costs the rebuild; a
+      // false negative would re-fetch/re-emit pages, so the check is
+      // deliberately conservative.
+      if (idx.count == state.fetchedCount) idx else { idx.release(); rebuild() }
+    }.getOrElse(rebuild())
+  }
+
+  /** Add committed round `round`'s fetch delta (`url_hash`) to `idx`,
+    * writing its run events, then advance the manifest and gc. Call only
+    * after the round's snapshot commit. Invalidates `idx`. */
+  def advance(store: SnapshotStore, idx: SeenIndex, delta: DataFrame,
+      round: Int): SeenIndex = {
+    val next = SeenIndex.add(idx, delta, Some(Sink(store.indexDir, round)))
+    writeManifest(store.indexDir, next.buckets, round)
+    gc(store.indexDir, round)
+    next
+  }
 }

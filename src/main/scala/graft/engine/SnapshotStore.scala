@@ -2,6 +2,7 @@ package graft.engine
 
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import scala.jdk.CollectionConverters._
 
 /** Minimal Iceberg-style snapshot/manifest layer over Parquet (SURVEY.md §4:
   * no Iceberg jars ship offline, so the table format is ours). Each crawl
@@ -11,7 +12,9 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
   *   <root>/r<N>/fetch_log/           parquet (delta, this round only)
   *   <root>/r<N>/manifest.json        {round, fetchedCount, parent,
   *                                     per-partition lineage, metrics}
-  *   <root>/_current                  atomic pointer (rename commit)
+  *
+  * There is no pointer file: a round is committed exactly when its `r<N>`
+  * directory exists, and the highest one is the latest round.
   *
   * The fetch log is also the SEEN SET: a URL is seen iff its url_hash is in
   * some fetch_log delta, so readers project `(url_hash, url)` from it and
@@ -24,8 +27,9 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
   * dominates commit I/O, so the duplicate copy was the single biggest
   * avoidable commit cost (r8 interleaved A/B: 48% overhead vs commit-free).
   *
-  * Resume loads `_current`, giving "the crawl resumes from any checkpoint"
-  * with per-partition lineage and fetch/dedupe metrics (north rule).
+  * Resume loads the highest committed round, giving "the crawl resumes
+  * from any checkpoint" with per-partition lineage and fetch/dedupe
+  * metrics (north rule).
   */
 final class SnapshotStore(rootDir: String) {
 
@@ -35,7 +39,6 @@ final class SnapshotStore(rootDir: String) {
   private def dir(round: Int): Path = root.resolve(s"r$round")
 
   private def rmTree(p: Path): Unit = if (Files.exists(p)) {
-    import scala.jdk.CollectionConverters._
     Files.walk(p).iterator().asScala.toSeq.reverse.foreach(Files.delete)
   }
 
@@ -48,8 +51,9 @@ final class SnapshotStore(rootDir: String) {
     * one wins and the loser gets [[SnapshotStore.CommitConflictException]]
     * with its staging cleaned up; it retries cleanly by reloading the
     * winner's snapshot ([[loadLatest]]) and recomputing its round on top.
-    * Only the winner advances the `_current` pointer, so readers never see
-    * a half-written round. */
+    * The rename is the ONLY commit step, so readers never see a
+    * half-written round and no crash can leave a committed round that
+    * [[currentRound]] does not name. */
   def commit(spark: SparkSession, state: FrontierEngine.CrawlState,
       r: FrontierEngine.RoundResult): Unit = {
     val staging = root.resolve(
@@ -105,12 +109,6 @@ final class SnapshotStore(rootDir: String) {
         rmTree(staging) // unrelated IO failure: clean staging, surface as-is
         throw e
     }
-
-    // winner-only: write pointer to temp, then rename over _current
-    val tmp = root.resolve(s"_current.tmp.${java.util.UUID.randomUUID().toString.take(8)}")
-    Files.writeString(tmp, s"r${state.round}")
-    Files.move(tmp, root.resolve("_current"),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
   }
 
   /** Directory of the durable [[SeenIndex]] sidecar ([[SeenIndexStore]]). */
@@ -136,10 +134,14 @@ final class SnapshotStore(rootDir: String) {
   def readFetchLog(spark: SparkSession, paths: Seq[String]): DataFrame =
     spark.read.schema(SnapshotStore.FetchLogSchema).parquet(paths: _*)
 
+  /** The latest committed round: the highest `r<N>` directory. Staging
+    * dirs, the index sidecar and plain files (such as an older store's
+    * pointer file) are not rounds. */
   def currentRound: Option[Int] = {
-    val p = root.resolve("_current")
-    if (Files.exists(p)) Some(Files.readString(p).trim.stripPrefix("r").toInt)
-    else None
+    val ls = Files.list(root)
+    try ls.iterator().asScala.filter(Files.isDirectory(_)).map(_.getFileName.toString)
+      .collect { case SnapshotStore.RoundDir(n) => n.toInt }.maxOption
+    finally ls.close()
   }
 
   def manifest(round: Int): Option[String] = {
@@ -147,11 +149,13 @@ final class SnapshotStore(rootDir: String) {
     if (Files.exists(p)) Some(Files.readString(p)) else None
   }
 
-  /** Cache-clear as a snapshot operation (the reference's clear_cache /
-    * per-URL delete, src/cache.ts:127-141 + server.ts:1561-1588): a new
-    * snapshot of the pages table minus a predicate — never an in-place
-    * delete. Returns the new snapshot's round id (current + 1 namespace
-    * `rNc<k>` to avoid colliding with crawl rounds). */
+  /** Cache-clear as a copy (the reference's clear_cache / per-URL delete,
+    * src/cache.ts:127-141 + server.ts:1561-1588): writes the pages table
+    * minus a predicate to `pages_compacted/` inside the already-committed
+    * latest round `r<N>` — never an in-place delete — and returns that
+    * round, or None on an empty store. It commits no new round, and no
+    * reader ([[pagesAsOf]], [[pagesDelta]], [[loadLatest]]) reads the
+    * copy. */
   def deleteWhere(spark: SparkSession, predicate: String): Option[Int] =
     currentRound.map { rN =>
       import org.apache.spark.sql.functions.not
@@ -212,6 +216,7 @@ final class SnapshotStore(rootDir: String) {
 }
 
 object SnapshotStore {
+  private val RoundDir = "r(\\d+)".r
   private val FrontierSchema = Encoders.product[FrontierEngine.FrontierRow].schema
 
   /** The fetch log's columns: a [[FrontierEngine.FetchedRow]] without `links`. */

@@ -43,6 +43,28 @@ class CrawlSpec extends AnyFunSuite {
   private def oracleRows(o: CrawlOracle.Result) =
     o.rows.map(e => (e.orderIdx, e.url, e.depth, e.round, e.status, e.title, e.text))
 
+  /** The guard config (seeds(1), depth 2, 200 pages, budget 7): its oracle
+    * and its engine config with the index on. */
+  private lazy val guardOracle =
+    CrawlOracle.run(seeds(1), CrawlOracle.Config(2, 200, 7, true, true, web))
+  private val indexCfg = FrontierEngine.Config(2, 200, 7, true, true, 4, web,
+    exactSeenIndex = true)
+
+  /** A store holding the first `rounds` committed rounds of the guard crawl
+    * with the index on: the state a crash after round `rounds` leaves. */
+  private def killedCrawl(prefix: String, rounds: Int): SnapshotStore = {
+    val store = new SnapshotStore(java.nio.file.Files.createTempDirectory(prefix).toString)
+    FrontierEngine.crawl(spark, seeds(1), indexCfg.copy(maxRounds = rounds), Some(store))
+    store
+  }
+
+  /** Resumes the guard crawl on `store`; rows and seen count match the oracle. */
+  private def resumeMatches(store: SnapshotStore): Unit = {
+    val (resumed, seen) = FrontierEngine.crawl(spark, seeds(1), indexCfg, Some(store))
+    assert(engineRows(resumed).toSeq == oracleRows(guardOracle))
+    assert(seen.count() == guardOracle.seen.size)
+  }
+
   test("plain BFS (no budget) matches oracle order, statuses, text, seen-set") {
     val (oracle, fetched, seen) = runBoth(seeds(1), maxDepth = 2,
       maxPages = 200, budget = Int.MaxValue)
@@ -136,36 +158,37 @@ class CrawlSpec extends AnyFunSuite {
       Set("frontier", "fetch_log", "manifest.json"))
   }
 
+  test("a stale `_current` pointer cannot block resume") {
+    // the round rename is the only commit: a pointer file naming r1, left
+    // by an older store that crashed between r2's rename and its pointer
+    // write, and a staging dir left by a writer that died mid-round are
+    // both ignored, so the resume starts after r2 instead of recomputing it
+    val store = killedCrawl("crawl-stale-ptr", 2)
+    val root = java.nio.file.Paths.get(store.indexDir).getParent
+    java.nio.file.Files.writeString(root.resolve("_current"), "r1")
+    java.nio.file.Files.createDirectories(root.resolve("r3.staging.0"))
+    resumeMatches(store)
+  }
+
   test("exact seen index: resume from snapshot rebuilds the index (no loss)") {
-    val dir = java.nio.file.Files.createTempDirectory("crawl-idx-resume").toString
-    val store = new SnapshotStore(dir)
-    val ocfg = CrawlOracle.Config(2, 200, 7, true, true, web)
-    val oracle = CrawlOracle.run(seeds(1), ocfg)
-    val ecfg = FrontierEngine.Config(2, 200, 7, true, true, 4, web,
-      exactSeenIndex = true)
-    FrontierEngine.crawl(spark, seeds(1), ecfg.copy(maxRounds = 2), Some(store))
-    val (resumed, seenResumed) = FrontierEngine.crawl(spark, seeds(1), ecfg, Some(store))
-    assert(engineRows(resumed).toSeq == oracleRows(oracle))
-    assert(seenResumed.count() == oracle.seen.size)
+    resumeMatches(killedCrawl("crawl-idx-resume", 2))
   }
 
   test("durable seen index: resume loads the sidecar with ZERO shuffle, crawl byte-identical") {
-    val dir = java.nio.file.Files.createTempDirectory("crawl-idx-durable").toString
-    val store = new SnapshotStore(dir)
-    val ocfg = CrawlOracle.Config(2, 200, 7, true, true, web)
-    val oracle = CrawlOracle.run(seeds(1), ocfg)
-    val ecfg = FrontierEngine.Config(2, 200, 7, true, true, 4, web,
-      exactSeenIndex = true)
-    FrontierEngine.crawl(spark, seeds(1), ecfg.copy(maxRounds = 2), Some(store))
+    val store = killedCrawl("crawl-idx-durable", 2)
     // phase 1 persisted run files + manifest for its committed rounds
     val m1 = SeenIndexStore.readManifest(store.indexDir)
     assert(m1.exists(_._2 == store.currentRound.get),
       s"sidecar manifest $m1 != committed round ${store.currentRound}")
 
     SeenIndexStore.lastLoadLineage = ""
-    val (resumed, seenResumed) = FrontierEngine.crawl(spark, seeds(1), ecfg, Some(store))
-    assert(engineRows(resumed).toSeq == oracleRows(oracle))
-    assert(seenResumed.count() == oracle.seen.size)
+    val ((resumed, seenResumed), jobs) = graft.SparkJobs.count(spark.sparkContext)(
+      FrontierEngine.crawl(spark, seeds(1), indexCfg, Some(store)))
+    assert(engineRows(resumed).toSeq == oracleRows(guardOracle))
+    assert(seenResumed.count() == guardOracle.seen.size)
+    // the count cross-check reads the committed fetched_count, so no
+    // fetch-log count job runs beside the load
+    assert(jobs <= 14, s"$jobs jobs in the resumed crawl")
 
     // the resume LOADED the sidecar (not fromSeen), and the load moved no
     // hashes: its lineage contains no shuffle at all — only the bucket-ID
@@ -179,19 +202,11 @@ class CrawlSpec extends AnyFunSuite {
     // simulate a crash between snapshot commit and index persist by
     // rolling the manifest back one round, then resume: the loader must
     // top up the missed round from its committed fetch_log/ parquet delta
-    val dir = java.nio.file.Files.createTempDirectory("crawl-idx-topup").toString
-    val store = new SnapshotStore(dir)
-    val ocfg = CrawlOracle.Config(2, 200, 7, true, true, web)
-    val oracle = CrawlOracle.run(seeds(1), ocfg)
-    val ecfg = FrontierEngine.Config(2, 200, 7, true, true, 4, web,
-      exactSeenIndex = true)
-    FrontierEngine.crawl(spark, seeds(1), ecfg.copy(maxRounds = 3), Some(store))
+    val store = killedCrawl("crawl-idx-topup", 3)
     val (buckets, r) = SeenIndexStore.readManifest(store.indexDir).get
     assert(r >= 2)
     SeenIndexStore.writeManifest(store.indexDir, buckets, r - 1)
-    val (resumed, seenResumed) = FrontierEngine.crawl(spark, seeds(1), ecfg, Some(store))
-    assert(engineRows(resumed).toSeq == oracleRows(oracle))
-    assert(seenResumed.count() == oracle.seen.size)
+    resumeMatches(store)
   }
 
   test("durable seen index: many-round crawl compacts buckets in-crawl; resume stays exact") {
@@ -224,13 +239,7 @@ class CrawlSpec extends AnyFunSuite {
   }
 
   test("durable seen index: survives snapshot expiry (top-up from the compacted delta is idempotent)") {
-    val dir = java.nio.file.Files.createTempDirectory("crawl-idx-expiry").toString
-    val store = new SnapshotStore(dir)
-    val ocfg = CrawlOracle.Config(2, 200, 7, true, true, web)
-    val oracle = CrawlOracle.run(seeds(1), ocfg)
-    val ecfg = FrontierEngine.Config(2, 200, 7, true, true, 4, web,
-      exactSeenIndex = true)
-    FrontierEngine.crawl(spark, seeds(1), ecfg.copy(maxRounds = 3), Some(store))
+    val store = killedCrawl("crawl-idx-expiry", 3)
     // expire everything into the latest round, AND roll the index manifest
     // back: the top-up then reads the compacted seen delta, which holds
     // the UNION of expired rounds — already-resident hashes must drop out
@@ -238,9 +247,7 @@ class CrawlSpec extends AnyFunSuite {
     store.expireSnapshotsBefore(spark, keep)
     val (buckets, r) = SeenIndexStore.readManifest(store.indexDir).get
     SeenIndexStore.writeManifest(store.indexDir, buckets, r - 2)
-    val (resumed, seenResumed) = FrontierEngine.crawl(spark, seeds(1), ecfg, Some(store))
-    assert(engineRows(resumed).toSeq == oracleRows(oracle))
-    assert(seenResumed.count() == oracle.seen.size)
+    resumeMatches(store)
   }
 
   test("durable seen index: stale run files AHEAD of the committed round are invalidated on resume") {
@@ -248,19 +255,11 @@ class CrawlSpec extends AnyFunSuite {
     // run files at rounds ahead of the new manifest; writeRun's
     // exists-skip idempotency would silently keep their stale content
     // when the resumed crawl re-reaches those rounds
-    val dir = java.nio.file.Files.createTempDirectory("crawl-idx-stale").toString
-    val store = new SnapshotStore(dir)
-    val ocfg = CrawlOracle.Config(2, 200, 7, true, true, web)
-    val oracle = CrawlOracle.run(seeds(1), ocfg)
-    val ecfg = FrontierEngine.Config(2, 200, 7, true, true, 4, web,
-      exactSeenIndex = true)
-    FrontierEngine.crawl(spark, seeds(1), ecfg.copy(maxRounds = 2), Some(store))
+    val store = killedCrawl("crawl-idx-stale", 2)
     val committed = store.currentRound.get
     val planted = Array(111L, 333L)
     SeenIndexStore.writeRun(store.indexDir, 0, committed + 1, base = false, planted)
-    val (resumed, seenResumed) = FrontierEngine.crawl(spark, seeds(1), ecfg, Some(store))
-    assert(engineRows(resumed).toSeq == oracleRows(oracle))
-    assert(seenResumed.count() == oracle.seen.size)
+    resumeMatches(store)
     // the planted file must be gone or re-written with the round's REAL
     // delta — never kept verbatim by the exists-skip
     val name = s"b0_r${committed + 1}_delta.run"
@@ -268,21 +267,14 @@ class CrawlSpec extends AnyFunSuite {
       assert(!SeenIndexStore.readRun(store.indexDir, name).sameElements(planted),
         "planted stale-timeline run survived the resume")
     // a further resume loads the (now clean) sidecar and stays exact
-    val (again, _) = FrontierEngine.crawl(spark, seeds(1), ecfg, Some(store))
-    assert(engineRows(again).toSeq == oracleRows(oracle))
+    resumeMatches(store)
   }
 
   test("durable seen index: a manifest AHEAD of the store wipes the dir and rebuilds") {
     // foreign/corrupt sidecar: the manifest claims rounds the store never
     // committed — nothing in the dir is trustworthy, including files at
     // rounds <= current whose content the exists-skip would keep
-    val dir = java.nio.file.Files.createTempDirectory("crawl-idx-foreign").toString
-    val store = new SnapshotStore(dir)
-    val ocfg = CrawlOracle.Config(2, 200, 7, true, true, web)
-    val oracle = CrawlOracle.run(seeds(1), ocfg)
-    val ecfg = FrontierEngine.Config(2, 200, 7, true, true, 4, web,
-      exactSeenIndex = true)
-    FrontierEngine.crawl(spark, seeds(1), ecfg.copy(maxRounds = 2), Some(store))
+    val store = killedCrawl("crawl-idx-foreign", 2)
     // poison one real run file in place, then point the manifest ahead
     val idxDir = new java.io.File(store.indexDir)
     val victim = idxDir.list().filter(_.endsWith(".run")).min
@@ -293,15 +285,12 @@ class CrawlSpec extends AnyFunSuite {
       base = vkind == "base", Array(12345L))
     val (buckets, _) = SeenIndexStore.readManifest(store.indexDir).get
     SeenIndexStore.writeManifest(store.indexDir, buckets, 99)
-    val (resumed, seenResumed) = FrontierEngine.crawl(spark, seeds(1), ecfg, Some(store))
-    assert(engineRows(resumed).toSeq == oracleRows(oracle))
-    assert(seenResumed.count() == oracle.seen.size)
+    resumeMatches(store)
     // the poisoned file cannot have survived the rebuild's wipe
     if (new java.io.File(idxDir, victim).exists())
       assert(!SeenIndexStore.readRun(store.indexDir, victim).sameElements(Array(12345L)),
         "foreign-sidecar run survived the wipe")
-    val (again, _) = FrontierEngine.crawl(spark, seeds(1), ecfg, Some(store))
-    assert(engineRows(again).toSeq == oracleRows(oracle))
+    resumeMatches(store)
   }
 
   test("durable seen index: a truncated run file fails the count cross-check and rebuilds") {
@@ -309,13 +298,7 @@ class CrawlSpec extends AnyFunSuite {
     // fail structurally — membership just silently shrinks. The resume's
     // idx.count vs committed-seen-count check must catch it and fall back
     // to the fromSeen rebuild.
-    val dir = java.nio.file.Files.createTempDirectory("crawl-idx-trunc").toString
-    val store = new SnapshotStore(dir)
-    val ocfg = CrawlOracle.Config(2, 200, 7, true, true, web)
-    val oracle = CrawlOracle.run(seeds(1), ocfg)
-    val ecfg = FrontierEngine.Config(2, 200, 7, true, true, 4, web,
-      exactSeenIndex = true)
-    FrontierEngine.crawl(spark, seeds(1), ecfg.copy(maxRounds = 2), Some(store))
+    val store = killedCrawl("crawl-idx-trunc", 2)
     val committed = store.currentRound.get
     val idxDir = new java.io.File(store.indexDir)
     val re = "b(\\d+)_r(\\d+)_(base|delta)\\.run".r
@@ -329,9 +312,7 @@ class CrawlSpec extends AnyFunSuite {
     new java.io.File(idxDir, victim).delete()
     SeenIndexStore.writeRun(store.indexDir, vb.toInt, vr.toInt,
       base = vkind == "base", content.drop(1))
-    val (resumed, seenResumed) = FrontierEngine.crawl(spark, seeds(1), ecfg, Some(store))
-    assert(engineRows(resumed).toSeq == oracleRows(oracle))
-    assert(seenResumed.count() == oracle.seen.size)
+    resumeMatches(store)
     // rebuild proof: fromSeen re-seeded the sidecar with base files at the
     // resumed-from round (a plain top-up never writes those)
     assert(idxDir.list().exists(_.matches(s"b\\d+_r${committed}_base\\.run")),
@@ -650,16 +631,15 @@ class CrawlSpec extends AnyFunSuite {
   private def guardCrawl(stored: Boolean, index: Boolean): (Int, Option[SnapshotStore]) = {
     val sc = spark.sparkContext
     val mode = s"store=$stored index=$index"
-    val oracle = CrawlOracle.run(seeds(1), CrawlOracle.Config(2, 200, 7, true, true, web))
     val store = Option.when(stored)(
       new SnapshotStore(java.nio.file.Files.createTempDirectory("crawl-jobs").toString))
-    val ecfg = FrontierEngine.Config(2, 200, 7, true, true, 4, web, exactSeenIndex = index)
+    val ecfg = indexCfg.copy(exactSeenIndex = index)
     val (((fetched, seen), jobs), left) = graft.SparkJobs.persisted(sc) {
       graft.SparkJobs.count(sc)(FrontierEngine.crawl(spark, seeds(1), ecfg, store))
     }
     val rows = engineRows(fetched)
-    assert(rows.toSeq == oracleRows(oracle), mode)
-    assert(seen.count() == oracle.seen.size, mode)
+    assert(rows.toSeq == oracleRows(guardOracle), mode)
+    assert(seen.count() == guardOracle.seen.size, mode)
     val rounds = rows.map(_._4).distinct.length
     assert(left <= rounds, s"$mode: $left persistent RDDs left after $rounds rounds")
     if (index) {
@@ -681,8 +661,8 @@ class CrawlSpec extends AnyFunSuite {
 
   test("exact seen index: multi-seed unbounded-budget BFS (q30's config class)") {
     // storeless with the index: FIFO-index counts, frontier checkpoint and
-    // index add per round (the last round, which takes nothing, runs only
-    // the counts), plus the 2-job index build
+    // index add per fetching round, the counts alone in the last round,
+    // which takes nothing, plus the one-job index build
     val oracle = CrawlOracle.run(seeds(0, 1, 2, 3),
       CrawlOracle.Config(2, 300, Int.MaxValue, true, true, web))
     val ecfg = FrontierEngine.Config(2, 300, Int.MaxValue, true, true, 4, web,
@@ -690,16 +670,18 @@ class CrawlSpec extends AnyFunSuite {
     val ((fetched, seen), jobs) = graft.SparkJobs.count(spark.sparkContext)(
       FrontierEngine.crawl(spark, seeds(0, 1, 2, 3), ecfg))
     val rows = engineRows(fetched)
-    // the rounds that fetched, plus the empty round that ends a crawl
+    // the rounds that fetched, and the empty round that ends a crawl
     // stopping short of its page cap
-    val rounds = rows.map(_._4).distinct.length + (if (rows.length < 300) 1 else 0)
+    val fetching = rows.map(_._4).distinct.length
+    val emptyRound = if (rows.length < 300) 1 else 0
     assert(rows.toSeq == oracleRows(oracle))
     assert(seen.count() == oracle.seen.size)
-    assert(jobs <= 3 * rounds + 2, s"$jobs jobs over $rounds storeless rounds")
+    assert(jobs <= 3 * fetching + emptyRound + 1,
+      s"$jobs jobs over $fetching fetching rounds and $emptyRound empty one")
   }
 
   test("store-backed index crawl: Spark jobs per committed round stay pinned") {
-    // 23 jobs over 4 committed rounds, the index build included. A second
+    // 22 jobs over 4 committed rounds, the index build included. A second
     // seen table, a schema-inferring read-back or an eager probe
     // checkpoint would each add one job per round.
     val (jobs, store) = guardCrawl(stored = true, index = true)
