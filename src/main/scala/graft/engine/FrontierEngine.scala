@@ -22,9 +22,10 @@ import graft.core.{Extract, Robots, UrlNorm}
   *    delta. `Config.exactSeenIndex` picks one of the two for the whole
   *    crawl.
   *  - the politeness budget is enforced BEFORE the salted repartition by a
-  *    window over the host key (rank ≤ B), so a mega-host never serializes
-  *    a partition: its per-round work is bounded by B and spread over
-  *    `saltBuckets` partitions.
+  *    window over the host key (rank ≤ B), so a mega-host's per-round fetch
+  *    work is bounded by B and spread over `saltBuckets` partitions. The
+  *    window itself is not bounded: it sorts one host's whole pre-budget
+  *    frontier in a single task.
   *  - the global BFS order index is computed without a single-partition
   *    window: range-partition by the FIFO key, count rows per partition,
   *    broadcast the prefix offsets, add the local rank (two narrow passes).
@@ -80,16 +81,16 @@ object FrontierEngine {
       exactSeenIndex: Boolean = false)
 
   final case class RoundResult(
-      fetched: DataFrame, // FetchedRow sans links
+      /** FetchedRow sans links, over a lazily checkpointed leaf: it
+        * materializes with its first consumer, and later rounds union it
+        * into the fetch log without embedding its plan. */
+      fetched: DataFrame,
       newFrontier: Dataset[FrontierRow],
       taken: Long,
       /** release the ranked frontier and the FIFO index's sorted cache —
         * call AFTER newFrontier and fetched are materialized (checkpoint/
-        * commit). The fetched cache stays: later rounds union it. */
-      cleanup: () => Unit = () => (),
-      /** release the cached fetch delta — call once nothing reads `fetched`
-        * (a plan collapse replaced it). */
-      releaseFetched: () => Unit = () => ())
+        * commit). */
+      cleanup: () => Unit = () => ())
 
   def seedFrontier(spark: SparkSession, seeds: Seq[String]): Dataset[FrontierRow] = {
     import spark.implicits._
@@ -141,11 +142,11 @@ object FrontierEngine {
         // anti-join against the fetch log's hashes (the scan reads only
         // that column). While the fetchedSoFar hashes fit a broadcast
         // (~16 MB at 2M), hint it explicitly: a storeless fetch log is a
-        // union of cached and checkpointed leaves with no stats, so the
-        // static planner (and the small-round mode with AQE off) would
-        // otherwise pick a sort-merge anti join for a few-hundred-row table
-        // (guide §3.1: pick the strategy deliberately). Past the threshold
-        // the planner decides; a crawl that large should run on the index.
+        // union of checkpointed leaves with no stats, so the static planner
+        // (a crawl round runs with AQE off) would otherwise pick a
+        // sort-merge anti join for a few-hundred-row table (guide §3.1:
+        // pick the strategy deliberately). Past the threshold the planner
+        // decides; a crawl that large should run on the index.
         val seenKeys = fetched.select("url_hash")
         val rhs = if (fetchedSoFar <= 2000000L) broadcast(seenKeys) else seenKeys
         deduped.join(rhs, Seq("url_hash"), "left_anti")
@@ -222,15 +223,18 @@ object FrontierEngine {
         }
       }
 
-    val fetchedCached = fetchedNow.cache()
+    // a lazy local checkpoint, not a cache: the delta materializes with its
+    // first consumer (the next frontier's checkpoint or commit) and enters
+    // every later plan as a LogicalRDD leaf, so the fetch log's plan never
+    // embeds the rounds before it
+    val delta = fetchedNow.localCheckpoint(eager = false)
     // taken row count is already known from the FIFO-index partition counts
     // (min(total, room)) — a count() action here would be one more full
-    // Spark job per round; materialization of the cached fetch happens on
-    // the first real consumer (the next frontier's checkpoint or commit)
+    // Spark job per round
     val takenCount = math.min(indexedTotal, math.max(0L, room))
 
     // 6. children → next frontier (membership is tested next round)
-    val children = fetchedCached
+    val children = delta
       // depth rides the exploded row: no self-join on parent_order
       .select(col("order_idx").as("parent_order"),
         (col("depth") + 1).as("depth"), posexplode(col("links")))
@@ -248,11 +252,10 @@ object FrontierEngine {
       .select(frontierCols: _*).as[FrontierRow]
 
     RoundResult(
-      fetched = fetchedCached.drop("links"),
+      fetched = delta.drop("links"),
       newFrontier = deferredByBudget.union(overflow).union(children),
       taken = takenCount,
-      cleanup = () => { ranked.unpersist(false); sortedCached.unpersist(false); () },
-      releaseFetched = () => { fetchedCached.unpersist(false); () })
+      cleanup = () => { ranked.unpersist(false); sortedCached.unpersist(false); () })
   }
 
   /** Union-plan collapse interval for iterative crawls (see [[crawl]]). */
@@ -330,48 +333,34 @@ object FrontierEngine {
     * set as (url_hash, url) — a projection of the fetched rows). When
     * `store` is given, every round commits deltas + lineage, and a crawl
     * on a store that holds rounds resumes from the highest committed one.
-    * Only the cached fetch deltas of the rounds since the last plan
-    * collapse (and, storeless, the collapsed leaf) outlive the call, and
-    * the returned frames read them: they are valid until the caller clears
-    * the cache (they cannot be recomputed). */
+    *
+    * The returned frames read the checkpointed fetch deltas of the rounds
+    * since the last plan collapse (and, storeless, the collapsed leaf).
+    * These leaves are not in the cache manager: `clearCache()` neither
+    * frees them nor leaves the frames unable to be recomputed, and Spark's
+    * ContextCleaner frees them once the frames are unreachable.
+    *
+    * Until it returns, the call sets `spark.sql.adaptive.enabled` and
+    * `spark.sql.shuffle.partitions` on the caller's session (restored on
+    * exit, a throw included); a concurrent query on that session sees
+    * them. */
   def crawl(spark: SparkSession, seeds: Seq[String], cfg: Config,
       store: Option[SnapshotStore] = None): (DataFrame, DataFrame) = {
     import spark.implicits._
-    // frontier row-count estimate for scale-adaptive range partitioning
-    // (only order-of-magnitude accuracy is needed; see
-    // withGlobalFifoIndexCounted). Seeded exactly, then advanced per round
-    // with a deliberate over-estimate of the child fan-out.
-    var (state, frontierEst) = store.flatMap(_.loadLatest(spark)) match {
-      // one cheap metadata-driven parquet count per RESUME (not per round)
-      case Some(s) => (s, s.frontier.count())
-      case None =>
-        (CrawlState(seedFrontier(spark, seeds).toDF(), emptyFetched(spark), 0, 0L),
-          seeds.size.toLong)
-    }
-    // --- small-round fast path (guide §1.2/§2.2) -----------------------
-    // While a round's working set (frontier estimate and seen set) is
-    // small, every stage holds a few thousand rows per task at cluster
-    // fan-out: AQE's per-query-stage jobs + driver re-optimization and
-    // 32-way shuffles cost more wall time than they save (measured at
-    // sf0.1: q30 3.4s → 2.1s, q94 3.1s → 2.2s). Below the threshold the
-    // loop scopes AQE off and sizes shuffle partitions from the estimate
-    // (~64k rows/partition, floor 8); at or above it the normal path keeps
-    // AQE's coalescing and skew handling. The switch derives from DATA
-    // SIZE, not the local core count, and both confs are restored on exit.
+    // a resume reads the frontier estimate its last commit recorded, so it
+    // plans its rounds exactly as the uninterrupted crawl does
+    var state = store.flatMap(_.loadLatest(spark)).getOrElse(CrawlState(
+      seedFrontier(spark, seeds).toDF(), emptyFetched(spark), 0, 0L, seeds.size.toLong))
+    // Every round runs with AQE off and shuffle partitions sized from its
+    // working set (~64k rows/partition, floor 8), guide §1.2/§2.2: at crawl
+    // sizes AQE's per-query-stage jobs, driver re-optimization and
+    // full-fan shuffles cost more wall time than they save (measured at
+    // sf0.1: q30 3.4s → 2.1s, q94 3.1s → 2.2s). This deliberately drops the
+    // earlier large-data mode that kept AQE on above 2M rows: no test or
+    // benchmark ever ran it, and its one forced run ran out of heap
+    // re-explaining the round plan on every stage update.
     val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
     val prevShuf = spark.conf.get("spark.sql.shuffle.partitions")
-    val smallRoundMax = 2000000L
-    def scaleRoundConfs(): Unit = {
-      val est = math.max(frontierEst, state.fetchedCount)
-      if (est < smallRoundMax) {
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        spark.conf.set("spark.sql.shuffle.partitions",
-          math.max(8L, est / (64L << 10)).toString)
-      } else {
-        spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
-        spark.conf.set("spark.sql.shuffle.partitions", prevShuf)
-      }
-    }
     // the seen-membership mode is fixed for the whole crawl; the resident
     // index is built once, here — with a store by [[SeenIndexStore.open]]
     // (the durable sidecar), storeless from the empty seed fetch log
@@ -380,24 +369,33 @@ object FrontierEngine {
       store.fold(SeenIndex.fromSeen(spark, state.fetched.select("url_hash"), buckets))(
         SeenIndexStore.open(spark, _, state, buckets))
     }
-    // the fetch log is `fetchedBase` (the empty seed table, a store read or
-    // a collapsed leaf) unioned with the cached fetch deltas of the rounds
-    // since; `releaseDeltas` frees those deltas
-    var fetchedBase = state.fetched
-    val releaseDeltas = scala.collection.mutable.ArrayBuffer[() => Unit]()
     var continue = state.fetchedCount < cfg.maxPages
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
     // try/finally: a throw anywhere in the loop (e.g. CommitConflictException
-    // from a losing OCC writer) must still release the resident index, the
-    // frontier leaf and the current round's transient caches
+    // from a losing OCC writer) must still restore the confs and release the
+    // resident index, the frontier leaf and the current round's caches
     try while (continue) {
-      scaleRoundConfs()
+      spark.conf.set("spark.sql.shuffle.partitions",
+        math.max(8L, math.max(state.frontierEst, state.fetchedCount) / (64L << 10)).toString)
       // no isEmpty pre-check: an empty frontier yields taken == 0 in the
       // round itself — the pre-check was one extra Spark job per round
       val fr = state.frontier.as[FrontierRow]
       val r = round(spark, fr, state.fetched, state.round, state.fetchedCount,
-        frontierEst, cfg, seenIdx)
-      try if (r.taken == 0) continue = false
-      else {
+        state.frontierEst, cfg, seenIdx)
+      try if (r.taken == 0) {
+        releaseLeaf(r.fetched) // never materialized, never unioned
+        continue = false
+      } else {
+        val next = CrawlState(
+          frontier = r.newFrontier.toDF(),
+          fetched = state.fetched.union(r.fetched),
+          round = state.round + 1,
+          fetchedCount = state.fetchedCount + r.taken,
+          // next frontier ≤ carried-over rows + children; bound the child
+          // fan-out generously (each link slot can emit a couple of forms)
+          // — the estimate only picks a partition-count order of magnitude
+          frontierEst = math.max(0L, state.frontierEst - r.taken) +
+            r.taken * math.max(8L, 4L * cfg.web.linksPerPage))
         // The round's outputs are materialized exactly ONCE, and the
         // lineage cut rides on that materialization — without a cut each
         // round's DAG embeds all previous rounds and the driver OOMs on
@@ -406,31 +404,22 @@ object FrontierEngine {
         // and read back, with its known schema, as the next state's leaf.
         // Without a store, localCheckpoint is the cut and the previous leaf
         // is released. The fetch log, which is also the seen set, is NEVER
-        // rewritten per round: the round's delta is already cached with
-        // flat lineage and is unioned in — at 10^10 URLs a per-round full
-        // rewrite would dominate every round's cost.
+        // rewritten per round: the round's delta is a checkpointed leaf,
+        // materialized here, and is unioned in — at 10^10 URLs a per-round
+        // full rewrite would dominate every round's cost.
         val frontierNext = store match {
           case Some(st) =>
-            val pending = CrawlState(
-              frontier = r.newFrontier.toDF(),
-              fetched = state.fetched, // commit reads only frontier/round/count
-              round = state.round + 1,
-              fetchedCount = state.fetchedCount + r.taken)
-            st.commit(spark, pending, r)
-            st.readFrontier(spark, pending.round)
+            st.commit(spark, next, r)
+            st.readFrontier(spark, next.round)
           case None =>
-            val leaf = r.newFrontier.toDF().localCheckpoint(true)
+            val leaf = next.frontier.localCheckpoint(true)
             releaseLeaf(state.frontier)
             leaf
         }
-        var newState = CrawlState(
-          frontier = frontierNext,
-          fetched = state.fetched.union(r.fetched),
-          round = state.round + 1,
-          fetchedCount = state.fetchedCount + r.taken)
+        var newState = next.copy(frontier = frontierNext)
         // O(delta) index maintenance (invalidates the previous index),
-        // fed from the round's cached fetch delta. The round's lazy probe
-        // reads the previous index: `ranked`, the fetch delta and the next
+        // fed from the round's fetch delta. The round's lazy probe reads
+        // the previous index: `ranked`, the fetch delta and the next
         // frontier are all materialized above. With a store,
         // [[SeenIndexStore.advance]] runs only after the snapshot commit
         // above succeeded, so the sidecar never claims a round the table
@@ -440,33 +429,24 @@ object FrontierEngine {
           store.fold(SeenIndex.add(idx, delta))(
             SeenIndexStore.advance(_, idx, delta, newState.round))
         }
-        // the cached per-round deltas keep LINEAGE flat, but the union
+        // the delta leaves keep each round's PLAN flat, but the union
         // TREE itself still deepens one node per round — a 10^4-round crawl
         // would accrete a 10^4-way union plan on the driver. Collapse it
         // every K rounds: with a store, reload the state from the committed
         // snapshot (a flat multi-path parquet scan); without one, cut the
         // union into a single materialized leaf. O(seen) cost amortized
         // over K rounds; plan size now O(K), independent of crawl length.
-        // Once the collapse has materialized, nothing reads the replaced
-        // deltas or, storeless, the previous collapsed leaf: release them,
-        // so the cache holds at most K deltas and one leaf.
-        releaseDeltas += r.releaseFetched
+        // Once the collapse has materialized, nothing reads the fetch log
+        // it replaces: releasing that log's leaves frees the previous
+        // collapsed leaf and every delta since, so at most K deltas and
+        // one leaf stay.
         if (newState.round % planCollapseEvery == 0) {
-          newState = store.flatMap(_.loadLatest(spark)) match {
-            case Some(s) => s
-            case None => newState.copy(fetched = newState.fetched.localCheckpoint(true))
-          }
-          releaseLeaf(fetchedBase)
-          releaseDeltas.foreach(_())
-          releaseDeltas.clear()
-          fetchedBase = newState.fetched
+          val collapsed = store.flatMap(_.loadLatest(spark)).getOrElse(
+            newState.copy(fetched = newState.fetched.localCheckpoint(true)))
+          releaseLeaf(newState.fetched)
+          newState = collapsed
         }
         state = newState
-        // next frontier ≤ carried-over rows + children; bound the child
-        // fan-out generously (each link slot can emit a couple of forms) —
-        // the estimate only picks a partition-count order of magnitude
-        frontierEst = math.max(0L, frontierEst - r.taken) +
-          r.taken * math.max(8L, 4L * cfg.web.linksPerPage)
         if (state.fetchedCount >= cfg.maxPages) continue = false
         if (state.round >= cfg.maxRounds) continue = false
       }
@@ -487,17 +467,22 @@ object FrontierEngine {
   def emptyFetched(spark: SparkSession): DataFrame =
     spark.createDataFrame(java.util.List.of[Row](), SnapshotStore.FetchLogSchema)
 
-  /** Unpersist a storeless checkpointed leaf (a round's frontier or a
-    * collapsed fetch log); a no-op for any other frame (the seed frontier,
-    * the empty seed fetch log, a committed parquet read). */
-  private def releaseLeaf(frontier: DataFrame): Unit =
-    frontier.queryExecution.logical match {
+  /** Unpersist every checkpointed leaf of a frame: a storeless frontier,
+    * or a fetch log's round deltas and collapsed leaf. The seed frontier,
+    * the empty seed fetch log and committed parquet reads have none. A
+    * released leaf cannot be recomputed, so call this only once nothing
+    * reads the frame. */
+  private def releaseLeaf(df: DataFrame): Unit =
+    df.queryExecution.logical.collectLeaves().foreach {
       case leaf: LogicalRDD => leaf.rdd.unpersist(false)
       case _ =>
     }
 
   /** The crawl's state at a round boundary. `fetched` is the fetch log,
-    * the one record of the seen set. */
+    * the one record of the seen set; `frontierEst` is the order-of-magnitude
+    * estimate of the frontier's row count that sizes the next round's
+    * partitions (see [[round]]). */
   final case class CrawlState(
-      frontier: DataFrame, fetched: DataFrame, round: Int, fetchedCount: Long)
+      frontier: DataFrame, fetched: DataFrame, round: Int, fetchedCount: Long,
+      frontierEst: Long)
 }

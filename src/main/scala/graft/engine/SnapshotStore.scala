@@ -10,8 +10,9 @@ import scala.jdk.CollectionConverters._
   *
   *   <root>/r<N>/frontier/            parquet (full: the frontier mutates)
   *   <root>/r<N>/fetch_log/           parquet (delta, this round only)
-  *   <root>/r<N>/manifest.json        {round, fetchedCount, parent,
-  *                                     per-partition lineage, metrics}
+  *   <root>/r<N>/manifest.json        {round, fetchedCount, frontier
+  *                                     estimate, parent, per-partition
+  *                                     lineage, metrics}
   *
   * There is no pointer file: a round is committed exactly when its `r<N>`
   * directory exists, and the highest one is the latest round.
@@ -71,7 +72,7 @@ final class SnapshotStore(rootDir: String) {
       .parquet(staging.resolve("fetch_log").toString)
 
     // per-partition lineage + fetch/dedupe metrics: ONE aggregation job
-    // over the cached fetch delta serves both manifest sections (these two
+    // over the fetch delta serves both manifest sections (these two
     // rollups used to be separate Spark jobs per committed round)
     import org.apache.spark.sql.functions._
     val cells = r.fetched.groupBy(col("partition_id"), col("status"))
@@ -89,6 +90,7 @@ final class SnapshotStore(rootDir: String) {
       .mkString("{", ",", "}")
     val manifest =
       s"""{"round":${state.round},"fetched_count":${state.fetchedCount},
+         |"frontier_est":${state.frontierEst},
          |"taken_this_round":${r.taken},
          |"parent":${if (state.round > 1) "\"r" + (state.round - 1) + "\"" else "null"},
          |"partitions":$byPartition,
@@ -204,14 +206,19 @@ final class SnapshotStore(rootDir: String) {
   }
 
   /** Load the latest committed state (all fetch_log deltas, one scan;
-    * expired rounds' dirs are simply absent). */
+    * expired rounds' dirs are simply absent). The row count and frontier
+    * estimate come from the manifest, so the load runs no job; a manifest
+    * without one of them (an older store's) falls back to a count. */
   def loadLatest(spark: SparkSession): Option[FrontierEngine.CrawlState] =
     currentRound.map { rN =>
       val fetched = readFetchLog(spark, (1 to rN).flatMap(fetchLogPath))
-      val count = manifest(rN)
-        .flatMap(m => "\"fetched_count\":(\\d+)".r.findFirstMatchIn(m).map(_.group(1).toLong))
-        .getOrElse(fetched.count())
-      FrontierEngine.CrawlState(readFrontier(spark, rN), fetched, rN, count)
+      val frontier = readFrontier(spark, rN)
+      val m = manifest(rN).getOrElse("")
+      def field(name: String) =
+        ("\"" + name + "\":(\\d+)").r.findFirstMatchIn(m).map(_.group(1).toLong)
+      FrontierEngine.CrawlState(frontier, fetched, rN,
+        field("fetched_count").getOrElse(fetched.count()),
+        field("frontier_est").getOrElse(frontier.count()))
     }
 }
 

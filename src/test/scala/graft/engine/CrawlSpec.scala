@@ -162,11 +162,17 @@ class CrawlSpec extends AnyFunSuite {
     // the round rename is the only commit: a pointer file naming r1, left
     // by an older store that crashed between r2's rename and its pointer
     // write, and a staging dir left by a writer that died mid-round are
-    // both ignored, so the resume starts after r2 instead of recomputing it
+    // both ignored, so the resume starts after r2 instead of recomputing it.
+    // That older store's manifest has no frontier estimate either: the
+    // resume counts the committed frontier instead.
     val store = killedCrawl("crawl-stale-ptr", 2)
     val root = java.nio.file.Paths.get(store.indexDir).getParent
     java.nio.file.Files.writeString(root.resolve("_current"), "r1")
     java.nio.file.Files.createDirectories(root.resolve("r3.staging.0"))
+    val manifest = root.resolve("r2").resolve("manifest.json")
+    java.nio.file.Files.writeString(manifest,
+      java.nio.file.Files.readString(manifest).replaceFirst("\"frontier_est\":\\d+,", ""))
+    assert(!store.manifest(2).get.contains("frontier_est"))
     resumeMatches(store)
   }
 
@@ -186,9 +192,10 @@ class CrawlSpec extends AnyFunSuite {
       FrontierEngine.crawl(spark, seeds(1), indexCfg, Some(store)))
     assert(engineRows(resumed).toSeq == oracleRows(guardOracle))
     assert(seenResumed.count() == guardOracle.seen.size)
-    // the count cross-check reads the committed fetched_count, so no
-    // fetch-log count job runs beside the load
-    assert(jobs <= 14, s"$jobs jobs in the resumed crawl")
+    // the count cross-check reads the committed fetched_count and the
+    // rounds are sized from the committed frontier estimate, so no count
+    // job runs beside the load
+    assert(jobs <= 12, s"$jobs jobs in the resumed crawl")
 
     // the resume LOADED the sidecar (not fromSeen), and the load moved no
     // hashes: its lineage contains no shuffle at all — only the bucket-ID
@@ -414,7 +421,7 @@ class CrawlSpec extends AnyFunSuite {
           "partition_id", "status", "title", "text", "etag")
       val st = FrontierEngine.CrawlState(
         frontier = FrontierEngine.seedFrontier(spark, Seq("http://h0.example/")).toDF(),
-        fetched = fetched, round = round, fetchedCount = 1L)
+        fetched = fetched, round = round, fetchedCount = 1L, frontierEst = 1L)
       val r = FrontierEngine.RoundResult(fetched,
         FrontierEngine.seedFrontier(spark, Seq("http://h0.example/next")),
         taken = 1L)
@@ -490,6 +497,33 @@ class CrawlSpec extends AnyFunSuite {
     assert(deferred.contains(SyntheticWeb.pageUrl(0, 1)))
   }
 
+  test("round: 16 FIFO range partitions and a 5-bucket index give the 1-partition anti-join's result") {
+    // the frontier estimate and the index's bucket count size partitions
+    // only; crawls at test sizes run one range partition and one bucket
+    import spark.implicits._
+    val store = new SnapshotStore(
+      java.nio.file.Files.createTempDirectory("crawl-round-scale").toString)
+    val cfg = FrontierEngine.Config(2, 300, Int.MaxValue, true, true, 4, web)
+    FrontierEngine.crawl(spark, seeds(0, 1, 2, 3), cfg.copy(maxRounds = 2), Some(store))
+    val st = store.loadLatest(spark).get
+    val frontier = st.frontier.as[FrontierEngine.FrontierRow]
+    def outcome(est: Long, idx: Option[SeenIndex]) = {
+      val r = FrontierEngine.round(spark, frontier, st.fetched, st.round,
+        st.fetchedCount, est, cfg, idx)
+      try (r.fetched.select("order_idx", "url", "status", "title", "text")
+          .collect().map(_.toSeq).sortBy(_.head.asInstanceOf[Long]).toSeq,
+        r.newFrontier.collect().toSeq.sortBy(f =>
+          (f.parent_order, f.link_pos, f.url_hash, f.depth, f.next_fetch_time)))
+      finally r.cleanup()
+    }
+    val idx = SeenIndex.fromSeen(spark, st.fetched.select("url_hash"), buckets = 5)
+    val scaled = try outcome(16L << 20, Some(idx)) finally idx.release()
+    val (fetched, next) = outcome(frontier.count(), None)
+    assert(fetched.length > 16, s"only ${fetched.length} rows fetched")
+    assert(scaled._1 == fetched)
+    assert(scaled._2 == next)
+  }
+
   test("deferSeconds: a budget-deferred row re-ranks behind fresher work") {
     import spark.implicits._
     def row(p: Int, pos: Int, parentOrder: Long) = {
@@ -542,6 +576,24 @@ class CrawlSpec extends AnyFunSuite {
     assert(fetched.count() == 28)
     val unions = "\\bUnion\\b".r.findAllIn(seen.queryExecution.logical.toString).size
     assert(unions <= 8, s"seen plan carries $unions Union nodes after 28 rounds")
+  }
+
+  test("fetch deltas are plan leaves: the fetch log's plan at 7 rounds is ≤ 4× its 2-round size") {
+    // one page per round and no collapse before round 8: with a delta that
+    // embedded the fetch log before it, the anti-join's plan string grew
+    // ×2.2 per round
+    val cfg = FrontierEngine.Config(maxDepth = 31, maxPages = 28, hostBudget = 1,
+      sameHostOnly = true, respectRobots = false, saltBuckets = 2, web = web)
+    Seq(false, true).foreach { index =>
+      def planChars(rounds: Int) = {
+        val (fetched, _) = FrontierEngine.crawl(spark, seeds(1),
+          cfg.copy(maxRounds = rounds, exactSeenIndex = index))
+        assert(fetched.count() == rounds)
+        fetched.queryExecution.explainString(org.apache.spark.sql.execution.ExtendedMode).length
+      }
+      val (two, seven) = (planChars(2), planChars(7))
+      assert(seven <= 4 * two, s"index=$index: $two plan chars at 2 rounds, $seven at 7")
+    }
   }
 
   test("plan collapse releases the fetch deltas and the leaf it replaces") {
@@ -625,7 +677,7 @@ class CrawlSpec extends AnyFunSuite {
 
   /** Crawls seeds(1) at the guard config (depth 2, 200 pages, budget 7) in
     * one seen/store mode and checks it against the oracle: rows, seen count,
-    * at most one persistent RDD left per round (the cached fetch deltas) and,
+    * at most one persistent RDD left per round (the fetch deltas) and,
     * with the index, the probe lineage. Returns the crawl's Spark job count
     * and its store. */
   private def guardCrawl(stored: Boolean, index: Boolean): (Int, Option[SnapshotStore]) = {
