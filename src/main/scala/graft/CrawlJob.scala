@@ -13,12 +13,11 @@ import graft.engine.{FrontierEngine, SnapshotStore, SyntheticWeb}
   * The master/executor topology comes from spark-submit (no .master() here;
   * local runs fall back to local[*]). Every round commits deltas +
   * per-partition lineage to the SnapshotStore; re-running the same command
-  * resumes from the last committed round. Seen membership uses the
-  * resident exact index unless `--exact-seen-index false` picks the
-  * anti-join; the JSON result line reports the mode as `seen_mode`.
-  * Fetching is the deterministic SyntheticWeb resolver (zero egress) — on
-  * a real cluster the fetch closure is the only seam to swap for an HTTP
-  * client.
+  * resumes from the last committed round. The resident seen index persists
+  * beside it as a durable sidecar, so a resume reloads it with zero
+  * shuffle. Fetching is the deterministic SyntheticWeb resolver (zero
+  * egress) — on a real cluster the fetch closure is the only seam to swap
+  * for an HTTP client.
   */
 object CrawlJob {
 
@@ -51,14 +50,7 @@ object CrawlJob {
       sameHostOnly = a.getOrElse("same-host-only", "false").toBoolean,
       respectRobots = true,
       saltBuckets = a.getOrElse("salt-buckets", "8").toInt,
-      web = web,
-      // membership mode for the whole crawl: the resident O(delta) index by
-      // default, since this entrypoint is the one meant for 10^10-URL
-      // crawls, where the anti-join re-shuffles the whole seen set every
-      // round; `--exact-seen-index false` picks the anti-join. With --store
-      // the index persists as a durable sidecar and resume reloads it with
-      // zero shuffle.
-      exactSeenIndex = a.getOrElse("exact-seen-index", "true").toBoolean)
+      web = web)
     val seeds = a.get("seeds").map(_.split(",").toSeq)
       .getOrElse((0 until 8).map(h => SyntheticWeb.pageUrl(h, 0)))
     val store = a.get("store").map(new SnapshotStore(_))
@@ -71,7 +63,6 @@ object CrawlJob {
     val secs = (System.nanoTime() - t0) / 1e9
     println(f"""{"fetched":$nFetched,"seen":$nSeen,"wall_sec":$secs%.1f,""" +
       f""""pages_per_sec":${(nFetched / secs).round},""" +
-      s""""seen_mode":"${if (cfg.exactSeenIndex) "index" else "anti"}",""" +
       s""""resumed_round":$resumedRound}""")
     spark.stop()
   }

@@ -16,11 +16,10 @@ import graft.core.{Extract, Robots, UrlNorm}
   *
   * Scale design (10^10-URL frontier):
   *  - the fetch log is the one record of the seen set: a URL is seen iff
-  *    its 64-bit xxh64 hash is in `fetched`. Membership is tested exactly,
-  *    either by an anti-join against `fetched.url_hash` or by probing the
-  *    resident [[SeenIndex]], which is maintained from each round's fetch
-  *    delta. `Config.exactSeenIndex` picks one of the two for the whole
-  *    crawl.
+  *    its 64-bit xxh64 hash is in `fetched`. Membership is tested exactly
+  *    by probing the resident [[SeenIndex]], which holds the same hashes
+  *    and is maintained from each round's fetch delta, so a round shuffles
+  *    only that delta and its own candidates, never the whole seen set.
   *  - the politeness budget is enforced BEFORE the salted repartition by a
   *    window over the host key (rank ≤ B), so a mega-host's per-round fetch
   *    work is bounded by B and spread over `saltBuckets` partitions. The
@@ -68,17 +67,10 @@ object FrontierEngine {
         * work next round. 0 (BFS mode) keeps next_fetch_time untouched —
         * the reference-exactness oracles pin that ordering. */
       deferSeconds: Long = 0L,
-      /** keep the seen set RESIDENT in a bucket-co-partitioned exact index
-        * ([[SeenIndex]]): per round only the DELTA shuffles (new hashes
-        * merged as one sorted run per bucket) and membership is a
-        * co-partitioned zip probe — O(delta) per round instead of the
-        * anti-join's O(seen) full-table shuffle, the dominant recurring
-        * cost of a long crawl. Results are byte-identical (identity is the
-        * 64-bit hash either way; CrawlSpec pins order/seen-set/text
-        * equality vs the scalar oracle with the index on). The mode holds
-        * for the whole crawl: the index is built once, at crawl start, from
-        * the fresh or resumed state. */
-      exactSeenIndex: Boolean = false)
+      /** Unread: every crawl probes the resident [[SeenIndex]]. The field
+        * stays only because the benchmark harness still names it, and goes
+        * once the benchmark stops naming it (ROADMAP item 7). */
+      exactSeenIndex: Boolean = true)
 
   final case class RoundResult(
       /** FetchedRow sans links, over a lazily checkpointed leaf: it
@@ -99,24 +91,22 @@ object FrontierEngine {
     }.toDS()
   }
 
-  /** One scheduling round. `fetched` is every page fetched so far (the
-    * fetch log); a frontier URL is seen iff its `url_hash` is in it, and
-    * its row count is `fetchedSoFar`, which also drives the global maxPages
-    * cap. When `seenIdx` is given, membership probes that resident index
-    * and `fetched` is not read at all this round. `frontierEst` is an
-    * order-of-magnitude estimate of the frontier's row count; it sizes the
-    * FIFO index's range partitions and never changes the result. */
+  /** One scheduling round. A frontier URL is seen iff its `url_hash` is in
+    * `seenIdx`, the resident index of every page fetched so far (the fetch
+    * log); their count is `fetchedSoFar`, which also drives the global
+    * maxPages cap. `frontierEst` is an order-of-magnitude estimate of the
+    * frontier's row count; it sizes the FIFO index's range partitions and
+    * never changes the result. */
   def round(spark: SparkSession, frontier: Dataset[FrontierRow],
-      fetched: DataFrame, roundNo: Int, fetchedSoFar: Long, frontierEst: Long,
-      cfg: Config, seenIdx: Option[SeenIndex] = None): RoundResult = {
+      roundNo: Int, fetchedSoFar: Long, frontierEst: Long,
+      cfg: Config, seenIdx: SeenIndex): RoundResult = {
     import spark.implicits._
 
     // 1. within-frontier dedupe: first discovery (min FIFO seq) wins.
     //    Grouped on url_hash ALONE (url/host ride the min-struct): identity
-    //    is the 64-bit hash everywhere in this engine (the seen set, the
-    //    seen index), and single-key grouping leaves the frame
-    //    hash-partitioned on exactly the anti-join key, so step 2 reuses
-    //    this exchange instead of reshuffling the whole frontier.
+    //    is the 64-bit hash everywhere in this engine (the fetch log, the
+    //    seen index). Step 2 does not reuse this exchange: the probe
+    //    shuffles the deduped candidates again, onto the index's buckets.
     val deduped = frontier
       .filter(col("depth") <= cfg.maxDepth)
       .groupBy(col("url_hash"))
@@ -131,26 +121,10 @@ object FrontierEngine {
         col("seq.priority").as("priority"),
         col("seq.next_fetch_time").as("next_fetch_time"))
 
-    // 2. seen-membership: exact, on the 64-bit hash
-    val fresh = seenIdx match {
-      case Some(idx) =>
-        // resident exact index: only the candidate side moves, filtered in
-        // a co-partitioned zip that runs once, when `ranked` is persisted.
-        // [[crawl]] picks the mode by passing the index or not.
-        SeenIndex.unseen(spark, deduped, idx)
-      case None =>
-        // anti-join against the fetch log's hashes (the scan reads only
-        // that column). While the fetchedSoFar hashes fit a broadcast
-        // (~16 MB at 2M), hint it explicitly: a storeless fetch log is a
-        // union of checkpointed leaves with no stats, so the static planner
-        // (a crawl round runs with AQE off) would otherwise pick a
-        // sort-merge anti join for a few-hundred-row table (guide §3.1:
-        // pick the strategy deliberately). Past the threshold the planner
-        // decides; a crawl that large should run on the index.
-        val seenKeys = fetched.select("url_hash")
-        val rhs = if (fetchedSoFar <= 2000000L) broadcast(seenKeys) else seenKeys
-        deduped.join(rhs, Seq("url_hash"), "left_anti")
-    }
+    // 2. seen-membership: exact, on the 64-bit hash. Only the candidate
+    //    side moves, filtered against the resident index in a
+    //    co-partitioned zip that runs once, when `ranked` is persisted.
+    val fresh = SeenIndex.unseen(spark, deduped, seenIdx)
 
     // 3. per-host politeness budget: rank by (priority, next_fetch_time)
     //    with FIFO tiebreak, over the host key, PRE-salt (north rule). In
@@ -163,7 +137,7 @@ object FrontierEngine {
     // persist the ranked frontier for the round: THREE consumers re-read it
     // (the range-partitioner's sample pass, the FIFO-index shuffle, and the
     // deferred branch of the next frontier) — uncached, the whole
-    // dedupe→anti-join→window pipeline re-executed once per consumer.
+    // dedupe→probe→window pipeline re-executed once per consumer.
     // Dataset.persist defaults to MEMORY_AND_DISK (spills, never OOMs);
     // size is O(one round's frontier) and it is released by
     // RoundResult.cleanup as soon as the round's outputs are materialized.
@@ -294,7 +268,7 @@ object FrontierEngine {
     // estimate, size range partitions at ~1M FrontierRows (~150 MB)
     // instead of a constant fan. The big win is small frontiers: at
     // parts == 1 the RangePartitioner computes NO bounds, so the sampling
-    // pass — a whole extra Spark job executing the dedupe→anti-join→window
+    // pass — a whole extra Spark job executing the dedupe→probe→window
     // pipeline per round — disappears. order_idx is a prefix sum over the
     // sorted ranges, so the result is identical at any partition count.
     val dp = spark.sparkContext.defaultParallelism
@@ -361,14 +335,13 @@ object FrontierEngine {
     // re-explaining the round plan on every stage update.
     val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
     val prevShuf = spark.conf.get("spark.sql.shuffle.partitions")
-    // the seen-membership mode is fixed for the whole crawl; the resident
-    // index is built once, here — with a store by [[SeenIndexStore.open]]
-    // (the durable sidecar), storeless from the empty seed fetch log
-    var seenIdx: Option[SeenIndex] = Option.when(cfg.exactSeenIndex) {
-      val buckets = SeenIndex.bucketsFor(spark, math.max(state.fetchedCount, cfg.maxPages))
-      store.fold(SeenIndex.fromSeen(spark, state.fetched.select("url_hash"), buckets))(
-        SeenIndexStore.open(spark, _, state, buckets))
-    }
+    // the resident index is opened once, here: with a store by
+    // [[SeenIndexStore.open]] (the durable sidecar); storeless, a crawl
+    // always starts from the empty seed fetch log, so its index starts
+    // empty and costs no job until the first round's add
+    val buckets = SeenIndex.bucketsFor(spark, math.max(state.fetchedCount, cfg.maxPages))
+    var seenIdx = store.fold(SeenIndex.empty(spark, buckets))(
+      SeenIndexStore.open(spark, _, state, buckets))
     var continue = state.fetchedCount < cfg.maxPages
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     // try/finally: a throw anywhere in the loop (e.g. CommitConflictException
@@ -380,7 +353,7 @@ object FrontierEngine {
       // no isEmpty pre-check: an empty frontier yields taken == 0 in the
       // round itself — the pre-check was one extra Spark job per round
       val fr = state.frontier.as[FrontierRow]
-      val r = round(spark, fr, state.fetched, state.round, state.fetchedCount,
+      val r = round(spark, fr, state.round, state.fetchedCount,
         state.frontierEst, cfg, seenIdx)
       try if (r.taken == 0) {
         releaseLeaf(r.fetched) // never materialized, never unioned
@@ -424,11 +397,9 @@ object FrontierEngine {
         // [[SeenIndexStore.advance]] runs only after the snapshot commit
         // above succeeded, so the sidecar never claims a round the table
         // doesn't have.
-        seenIdx = seenIdx.map { idx =>
-          val delta = r.fetched.select("url_hash")
-          store.fold(SeenIndex.add(idx, delta))(
-            SeenIndexStore.advance(_, idx, delta, newState.round))
-        }
+        val delta = r.fetched.select("url_hash")
+        seenIdx = store.fold(SeenIndex.add(seenIdx, delta))(
+          SeenIndexStore.advance(_, seenIdx, delta, newState.round))
         // the delta leaves keep each round's PLAN flat, but the union
         // TREE itself still deepens one node per round — a 10^4-round crawl
         // would accrete a 10^4-way union plan on the driver. Collapse it
@@ -458,7 +429,7 @@ object FrontierEngine {
     finally {
       spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
       spark.conf.set("spark.sql.shuffle.partitions", prevShuf)
-      seenIdx.foreach(_.release())
+      seenIdx.release()
       releaseLeaf(state.frontier)
     }
     (state.fetched, state.fetched.select("url_hash", "url"))

@@ -5,11 +5,11 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
-/** Bucket-co-partitioned EXACT seen-set index — the O(delta)-per-round form
-  * of the seen-membership test.
+/** Bucket-co-partitioned EXACT seen-set index — the crawl's one
+  * seen-membership test.
   *
-  * The plain anti-join shuffles the ENTIRE seen set (the fetch log's
-  * hashes) every round: at a 10^10-URL seen set that is an
+  * Joining the candidates against the fetch log's hashes would shuffle the
+  * ENTIRE seen set every round: at a 10^10-URL seen set that is an
   * O(seen) network pass per scheduling round, the dominant recurring cost
   * of a long crawl. This index keeps the seen set RESIDENT and
   * partitioned: partition `b` of [[runs]] holds exactly the hashes with
@@ -35,9 +35,9 @@ import org.apache.spark.storage.StorageLevel
   * 10^10 URLs that is ~2500 buckets of ~4M hashes; per-task memory during
   * a probe is ONE bucket, independent of total seen size.
   *
-  * Semantics: exactly the anti-join's (identity = the 64-bit xxh64 url
-  * hash, the engine-wide convention) — CrawlSpec pins byte-identical crawl
-  * order/seen-set vs the scalar BFS oracle with the index enabled.
+  * Semantics: exact set membership of the fetch log's hashes (identity =
+  * the 64-bit xxh64 url hash, the engine-wide convention) — CrawlSpec pins
+  * byte-identical crawl order/seen-set vs the scalar BFS oracle.
   */
 final class SeenIndex private (
     val buckets: Int,
@@ -89,7 +89,7 @@ object SeenIndex {
       .partitionBy(new HashPartitioner(buckets)), 0L)
 
   /** Rebuild from the seen hashes (the fetch log's `url_hash` column;
-    * resume path / first use). With `sink` set the rebuilt buckets are also
+    * the store-backed resume path). With `sink` set the rebuilt buckets are also
     * persisted as durable base runs, so the NEXT resume is a
     * [[SeenIndexStore.load]] instead. */
   def fromSeen(spark: SparkSession, seen: DataFrame, buckets: Int,
@@ -165,8 +165,8 @@ object SeenIndex {
     next
   }
 
-  /** The candidates whose `url_hash` is NOT in the index — the index-backed
-    * `candidates LEFT ANTI JOIN seen`. Only the candidate side shuffles, onto
+  /** The candidates whose `url_hash` is NOT in the index (the result of
+    * `candidates LEFT ANTI JOIN seen`). Only the candidate side shuffles, onto
     * the bucket partitioner; the seen side is RESIDENT, and rows pass the
     * co-partitioned zip's filter unchanged. Lazy: it reads `idx.runs`, so
     * materialize every consumer before [[add]] invalidates `idx`. */

@@ -28,11 +28,8 @@ object CrawlQueries {
     QuerySpec(
       "q30_crawl_bfs",
       (s, _) => {
-        // exactSeenIndex: the resident bucket-co-partitioned seen index
-        // (O(delta) shuffle per round) — byte-identical to the anti-join
-        // path (CrawlSpec), so the driver's oracle doubles as its gate
         val cfg = FrontierEngine.Config(maxDepth = 2, maxPages = 300,
-          hostBudget = Int.MaxValue, web = web, exactSeenIndex = true)
+          hostBudget = Int.MaxValue, web = web)
         val (fetched, _) = FrontierEngine.crawl(s, seeds(0, 1, 2, 3), cfg)
         val rows = OracleMat(s, "q30")( // few hundred rows over ~150 cached
           // partitions: one write task beats a per-partition file fan-out

@@ -44,23 +44,22 @@ class CrawlSpec extends AnyFunSuite {
     o.rows.map(e => (e.orderIdx, e.url, e.depth, e.round, e.status, e.title, e.text))
 
   /** The guard config (seeds(1), depth 2, 200 pages, budget 7): its oracle
-    * and its engine config with the index on. */
+    * and its engine config. */
   private lazy val guardOracle =
     CrawlOracle.run(seeds(1), CrawlOracle.Config(2, 200, 7, true, true, web))
-  private val indexCfg = FrontierEngine.Config(2, 200, 7, true, true, 4, web,
-    exactSeenIndex = true)
+  private val guardCfg = FrontierEngine.Config(2, 200, 7, true, true, 4, web)
 
-  /** A store holding the first `rounds` committed rounds of the guard crawl
-    * with the index on: the state a crash after round `rounds` leaves. */
+  /** A store holding the first `rounds` committed rounds of the guard crawl:
+    * the state a crash after round `rounds` leaves. */
   private def killedCrawl(prefix: String, rounds: Int): SnapshotStore = {
     val store = new SnapshotStore(java.nio.file.Files.createTempDirectory(prefix).toString)
-    FrontierEngine.crawl(spark, seeds(1), indexCfg.copy(maxRounds = rounds), Some(store))
+    FrontierEngine.crawl(spark, seeds(1), guardCfg.copy(maxRounds = rounds), Some(store))
     store
   }
 
   /** Resumes the guard crawl on `store`; rows and seen count match the oracle. */
   private def resumeMatches(store: SnapshotStore): Unit = {
-    val (resumed, seen) = FrontierEngine.crawl(spark, seeds(1), indexCfg, Some(store))
+    val (resumed, seen) = FrontierEngine.crawl(spark, seeds(1), guardCfg, Some(store))
     assert(engineRows(resumed).toSeq == oracleRows(guardOracle))
     assert(seen.count() == guardOracle.seen.size)
   }
@@ -189,7 +188,7 @@ class CrawlSpec extends AnyFunSuite {
 
     SeenIndexStore.lastLoadLineage = ""
     val ((resumed, seenResumed), jobs) = graft.SparkJobs.count(spark.sparkContext)(
-      FrontierEngine.crawl(spark, seeds(1), indexCfg, Some(store)))
+      FrontierEngine.crawl(spark, seeds(1), guardCfg, Some(store)))
     assert(engineRows(resumed).toSeq == oracleRows(guardOracle))
     assert(seenResumed.count() == guardOracle.seen.size)
     // the count cross-check reads the committed fetched_count and the
@@ -225,8 +224,7 @@ class CrawlSpec extends AnyFunSuite {
     val store = new SnapshotStore(dir)
     val ocfg = CrawlOracle.Config(3, 200, 2, false, true, web)
     val oracle = CrawlOracle.run(seeds(1), ocfg)
-    val ecfg = FrontierEngine.Config(3, 200, 2, false, true, 4, web,
-      exactSeenIndex = true)
+    val ecfg = FrontierEngine.Config(3, 200, 2, false, true, 4, web)
     FrontierEngine.crawl(spark, seeds(1), ecfg.copy(maxRounds = 12), Some(store))
     assert(store.currentRound.get >= 10, "crawl too short to force compaction")
     val files = new java.io.File(store.indexDir).list().filter(_.endsWith(".run"))
@@ -487,9 +485,9 @@ class CrawlSpec extends AnyFunSuite {
       row(2, 1.0, 5L, 1), // best priority, later nft
       row(3, 1.0, 2L, 2)  // best priority, earliest nft -> rank 1
     ).toDS()
-    val emptySeen = Seq.empty[(Long, String)].toDF("url_hash", "url")
     val cfg = FrontierEngine.Config(maxDepth = 0, maxPages = 100, hostBudget = 2, web = web)
-    val r = FrontierEngine.round(spark, frontier, emptySeen, 1, 0L, frontier.count(), cfg)
+    val r = FrontierEngine.round(spark, frontier, 1, 0L, frontier.count(), cfg,
+      SeenIndex.empty(spark, 1))
     val fetchedUrls = r.fetched.select("url").collect().map(_.getString(0)).toSet
     assert(fetchedUrls == Set(SyntheticWeb.pageUrl(0, 3), SyntheticWeb.pageUrl(0, 2)),
       s"took $fetchedUrls")
@@ -497,7 +495,7 @@ class CrawlSpec extends AnyFunSuite {
     assert(deferred.contains(SyntheticWeb.pageUrl(0, 1)))
   }
 
-  test("round: 16 FIFO range partitions and a 5-bucket index give the 1-partition anti-join's result") {
+  test("round: 16 FIFO range partitions and a 5-bucket index give the 1-partition 1-bucket result") {
     // the frontier estimate and the index's bucket count size partitions
     // only; crawls at test sizes run one range partition and one bucket
     import spark.implicits._
@@ -507,18 +505,18 @@ class CrawlSpec extends AnyFunSuite {
     FrontierEngine.crawl(spark, seeds(0, 1, 2, 3), cfg.copy(maxRounds = 2), Some(store))
     val st = store.loadLatest(spark).get
     val frontier = st.frontier.as[FrontierEngine.FrontierRow]
-    def outcome(est: Long, idx: Option[SeenIndex]) = {
-      val r = FrontierEngine.round(spark, frontier, st.fetched, st.round,
+    def outcome(est: Long, buckets: Int) = {
+      val idx = SeenIndex.fromSeen(spark, st.fetched.select("url_hash"), buckets)
+      val r = FrontierEngine.round(spark, frontier, st.round,
         st.fetchedCount, est, cfg, idx)
       try (r.fetched.select("order_idx", "url", "status", "title", "text")
           .collect().map(_.toSeq).sortBy(_.head.asInstanceOf[Long]).toSeq,
         r.newFrontier.collect().toSeq.sortBy(f =>
           (f.parent_order, f.link_pos, f.url_hash, f.depth, f.next_fetch_time)))
-      finally r.cleanup()
+      finally { r.cleanup(); idx.release() }
     }
-    val idx = SeenIndex.fromSeen(spark, st.fetched.select("url_hash"), buckets = 5)
-    val scaled = try outcome(16L << 20, Some(idx)) finally idx.release()
-    val (fetched, next) = outcome(frontier.count(), None)
+    val scaled = outcome(16L << 20, buckets = 5)
+    val (fetched, next) = outcome(frontier.count(), buckets = 1)
     assert(fetched.length > 16, s"only ${fetched.length} rows fetched")
     assert(scaled._1 == fetched)
     assert(scaled._2 == next)
@@ -531,12 +529,12 @@ class CrawlSpec extends AnyFunSuite {
       FrontierEngine.FrontierRow(u, graft.core.UrlNorm.urlHash(u), "host0.example",
         0, parentOrder, pos, 0.0, 0L)
     }
-    val emptySeen = Seq.empty[(Long, String)].toDF("url_hash", "url")
     val cfg = FrontierEngine.Config(maxDepth = 0, maxPages = 100, hostBudget = 1,
       web = web, deferSeconds = 2L)
     // round 1: A (FIFO first) taken, B deferred and stamped nft = 1 + 2 = 3
     val frontier1 = Seq(row(1, 0, 0L), row(2, 1, 0L)).toDS()
-    val r1 = FrontierEngine.round(spark, frontier1, emptySeen, 1, 0L, frontier1.count(), cfg)
+    val r1 = FrontierEngine.round(spark, frontier1, 1, 0L, frontier1.count(), cfg,
+      SeenIndex.empty(spark, 1))
     assert(r1.fetched.select("url").as[String].collect().toSeq ==
       Seq(SyntheticWeb.pageUrl(0, 1)))
     val deferred = r1.newFrontier.collect()
@@ -545,8 +543,8 @@ class CrawlSpec extends AnyFunSuite {
     // round 2: C arrives fresh (nft=0, LATER FIFO position) — it must beat
     // the deferred B (nft=3) under the (priority, next_fetch_time) rank
     val frontier2 = r1.newFrontier.union(Seq(row(3, 0, 5L)).toDS())
-    val r2 = FrontierEngine.round(spark, frontier2,
-      emptySeen.union(r1.fetched.select("url_hash", "url")), 2, 1L, frontier2.count(), cfg)
+    val r2 = FrontierEngine.round(spark, frontier2, 2, 1L, frontier2.count(), cfg,
+      SeenIndex.fromSeen(spark, r1.fetched.select("url_hash"), 1))
     assert(r2.fetched.select("url").as[String].collect().toSeq ==
       Seq(SyntheticWeb.pageUrl(0, 3)))
     assert(r2.newFrontier.collect().map(_.url).toSeq ==
@@ -579,21 +577,19 @@ class CrawlSpec extends AnyFunSuite {
   }
 
   test("fetch deltas are plan leaves: the fetch log's plan at 7 rounds is ≤ 4× its 2-round size") {
-    // one page per round and no collapse before round 8: with a delta that
-    // embedded the fetch log before it, the anti-join's plan string grew
-    // ×2.2 per round
+    // one page per round and no collapse before round 8. A leaf adds ~1.4k
+    // plan chars per round; a cached delta, which embeds its round's whole
+    // pipeline, adds ~27k, so the ratio alone (×3.5) would not catch one
     val cfg = FrontierEngine.Config(maxDepth = 31, maxPages = 28, hostBudget = 1,
       sameHostOnly = true, respectRobots = false, saltBuckets = 2, web = web)
-    Seq(false, true).foreach { index =>
-      def planChars(rounds: Int) = {
-        val (fetched, _) = FrontierEngine.crawl(spark, seeds(1),
-          cfg.copy(maxRounds = rounds, exactSeenIndex = index))
-        assert(fetched.count() == rounds)
-        fetched.queryExecution.explainString(org.apache.spark.sql.execution.ExtendedMode).length
-      }
-      val (two, seven) = (planChars(2), planChars(7))
-      assert(seven <= 4 * two, s"index=$index: $two plan chars at 2 rounds, $seven at 7")
+    def planChars(rounds: Int) = {
+      val (fetched, _) = FrontierEngine.crawl(spark, seeds(1), cfg.copy(maxRounds = rounds))
+      assert(fetched.count() == rounds)
+      fetched.queryExecution.explainString(org.apache.spark.sql.execution.ExtendedMode).length
     }
+    val (two, seven) = (planChars(2), planChars(7))
+    assert(seven <= 4 * two, s"$two plan chars at 2 rounds, $seven at 7")
+    assert(seven - two <= 5 * 8000, s"$two plan chars at 2 rounds, $seven at 7")
   }
 
   test("plan collapse releases the fetch deltas and the leaf it replaces") {
@@ -675,50 +671,45 @@ class CrawlSpec extends AnyFunSuite {
     assert(parts > 1, s"mega-host serialized into one partition (round $bigRound)")
   }
 
-  /** Crawls seeds(1) at the guard config (depth 2, 200 pages, budget 7) in
-    * one seen/store mode and checks it against the oracle: rows, seen count,
-    * at most one persistent RDD left per round (the fetch deltas) and,
-    * with the index, the probe lineage. Returns the crawl's Spark job count
-    * and its store. */
-  private def guardCrawl(stored: Boolean, index: Boolean): (Int, Option[SnapshotStore]) = {
+  /** Crawls seeds(1) at the guard config (depth 2, 200 pages, budget 7),
+    * with or without a store, and checks it against the oracle: rows, seen
+    * count, at most one persistent RDD left per round (the fetch deltas)
+    * and the probe lineage. Returns the crawl's Spark job count and its
+    * store. */
+  private def guardCrawl(stored: Boolean): (Int, Option[SnapshotStore]) = {
     val sc = spark.sparkContext
-    val mode = s"store=$stored index=$index"
+    val mode = s"store=$stored"
     val store = Option.when(stored)(
       new SnapshotStore(java.nio.file.Files.createTempDirectory("crawl-jobs").toString))
-    val ecfg = indexCfg.copy(exactSeenIndex = index)
     val (((fetched, seen), jobs), left) = graft.SparkJobs.persisted(sc) {
-      graft.SparkJobs.count(sc)(FrontierEngine.crawl(spark, seeds(1), ecfg, store))
+      graft.SparkJobs.count(sc)(FrontierEngine.crawl(spark, seeds(1), guardCfg, store))
     }
     val rows = engineRows(fetched)
     assert(rows.toSeq == oracleRows(guardOracle), mode)
     assert(seen.count() == guardOracle.seen.size, mode)
     val rounds = rows.map(_._4).distinct.length
     assert(left <= rounds, s"$mode: $left persistent RDDs left after $rounds rounds")
-    if (index) {
-      // the probe never shuffles the seen side: ONE ShuffledRDD (the
-      // candidate partitionBy) zipped against the resident runs
-      val lin = SeenIndex.lastProbeLineage
-      assert("ShuffledRDD".r.findAllIn(lin).size == 1, s"seen side shuffled:\n$lin")
-      assert(lin.contains("ZippedPartitionsRDD"), s"probe is not a zip:\n$lin")
-    }
+    // the probe never shuffles the seen side: ONE ShuffledRDD (the
+    // candidate partitionBy) zipped against the resident runs
+    val lin = SeenIndex.lastProbeLineage
+    assert("ShuffledRDD".r.findAllIn(lin).size == 1, s"$mode: seen side shuffled:\n$lin")
+    assert(lin.contains("ZippedPartitionsRDD"), s"$mode: probe is not a zip:\n$lin")
     (jobs, store)
   }
 
-  test("exact seen index: crawl is byte-identical to the anti-join path") {
-    // storeless, the resident bucket-co-partitioned index against the
-    // O(seen)-shuffle anti-join: both reproduce the oracle exactly
-    guardCrawl(stored = false, index = true)
-    guardCrawl(stored = false, index = false)
+  test("exact seen index: storeless crawl is byte-identical to the oracle") {
+    // storeless, the resident bucket-co-partitioned index reproduces the
+    // oracle exactly and leaves no cache behind
+    guardCrawl(stored = false)
   }
 
   test("exact seen index: multi-seed unbounded-budget BFS (q30's config class)") {
-    // storeless with the index: FIFO-index counts, frontier checkpoint and
-    // index add per fetching round, the counts alone in the last round,
-    // which takes nothing, plus the one-job index build
+    // storeless: FIFO-index counts, frontier checkpoint and index add per
+    // fetching round, and the counts alone in the last round, which takes
+    // nothing. The index starts empty, so building it costs no job.
     val oracle = CrawlOracle.run(seeds(0, 1, 2, 3),
       CrawlOracle.Config(2, 300, Int.MaxValue, true, true, web))
-    val ecfg = FrontierEngine.Config(2, 300, Int.MaxValue, true, true, 4, web,
-      exactSeenIndex = true)
+    val ecfg = FrontierEngine.Config(2, 300, Int.MaxValue, true, true, 4, web)
     val ((fetched, seen), jobs) = graft.SparkJobs.count(spark.sparkContext)(
       FrontierEngine.crawl(spark, seeds(0, 1, 2, 3), ecfg))
     val rows = engineRows(fetched)
@@ -728,7 +719,7 @@ class CrawlSpec extends AnyFunSuite {
     val emptyRound = if (rows.length < 300) 1 else 0
     assert(rows.toSeq == oracleRows(oracle))
     assert(seen.count() == oracle.seen.size)
-    assert(jobs <= 3 * fetching + emptyRound + 1,
+    assert(jobs <= 3 * fetching + emptyRound,
       s"$jobs jobs over $fetching fetching rounds and $emptyRound empty one")
   }
 
@@ -736,9 +727,7 @@ class CrawlSpec extends AnyFunSuite {
     // 22 jobs over 4 committed rounds, the index build included. A second
     // seen table, a schema-inferring read-back or an eager probe
     // checkpoint would each add one job per round.
-    val (jobs, store) = guardCrawl(stored = true, index = true)
+    val (jobs, store) = guardCrawl(stored = true)
     assert(jobs <= 6 * store.get.currentRound.get, s"$jobs jobs")
-    // the store-backed anti-join path matches and releases its caches too
-    guardCrawl(stored = true, index = false)
   }
 }
