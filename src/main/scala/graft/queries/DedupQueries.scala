@@ -12,8 +12,8 @@ import org.apache.spark.sql.functions._
   * Scale notes (100 TB):
   *  - MinHash signatures are computed per-row (narrow, no shuffle); only
   *    the (band_hash → doc_id) explode shuffles, and it's k·rows small.
-  *  - Candidate verification joins only within identical band buckets —
-  *    skewed mega-buckets are bounded because band hashes are 64-bit.
+  *  - [[minhashCandidates]] emits a band bucket's O(bucket²) pairs from one
+  *    task (DedupStarSpec pins the count); ROADMAP item 4 splits the skew.
   *  - SimHash is a per-row 64-bit fingerprint; hamming-≤k search joins on
   *    16-bit chunks (pigeonhole), never all-pairs.
   */
@@ -158,28 +158,29 @@ object DedupQueries {
       .dropDuplicates("doc_a", "doc_b")
   }
 
-  /** Per-doc word sets (doc_id, set) — the Jaccard operand over word sets
-    * (src/server.ts:24-39). */
-  private def wordSets(d: DataFrame): DataFrame =
-    d.select(col("doc_id"), array_distinct(col("toks")).as("set"))
-
-  /** The exact-Jaccard confirm kernel: joins each candidate pair's two word
-    * sets from `sets` (doc_id, set) and keeps pairs with jaccard ≥ 0.8.
-    * Returns (doc_a, doc_b, inter, union_). */
-  private def jaccardJoin(cand: DataFrame, sets: DataFrame): DataFrame =
+  /** The exact-Jaccard confirm kernel: joins each candidate pair's distinct-token
+    * sets, built from `docs` (doc_id, toks) as xxhash64 values, and keeps pairs
+    * with jaccard ≥ 0.8; returns (doc_a, doc_b, inter, union_). Two tokens of a
+    * pair sharing a hash move inter and union_ by one each: for a union of n
+    * distinct tokens, chance ≤ n²/2⁶⁵ (~3×10⁻¹⁶ at n = 100), as for URL hashes. */
+  private def jaccardJoin(cand: DataFrame, docs: DataFrame): DataFrame = {
+    val sets = docs.select(col("doc_id"),
+      array_distinct(transform(col("toks"), xxhash64(_))).as("set"))
     cand
       .join(sets.select(col("doc_id").as("doc_a"), col("set").as("set_a")), Seq("doc_a"))
       .join(sets.select(col("doc_id").as("doc_b"), col("set").as("set_b")), Seq("doc_b"))
       .withColumn("inter", size(array_intersect(col("set_a"), col("set_b"))))
+      // inter*10 >= union_*8 (jaccard ≥ 0.8) solved for inter: one intersect
+      .filter(col("inter") * 18 >= (size(col("set_a")) + size(col("set_b"))) * 8)
       .withColumn("union_", size(col("set_a")) + size(col("set_b")) - col("inter"))
-      .filter(col("inter") * 10 >= col("union_") * 8) // jaccard >= 0.8
       .select(col("doc_a"), col("doc_b"), col("inter"), col("union_"))
+  }
 
   /** Exact-Jaccard confirm over an LSH candidate pair set (the second
     * stage of [[minhashPairs]], separable so the benchmark can time and count
     * the stages independently without recomputing signatures). */
   def confirmJaccard(d: DataFrame, cand: DataFrame): DataFrame =
-    jaccardJoin(cand, wordSets(d)).select(col("doc_a"), col("doc_b"))
+    jaccardJoin(cand, d).select(col("doc_a"), col("doc_b"))
 
   /** Star-edge count up to which [[ccLabels]] finishes in one task's
     * [[MinUnionFind]]: a star graph has at most one id per edge, so that
@@ -269,17 +270,16 @@ object DedupQueries {
       (s, dir) => {
         val d = t(s, dir, "documents")
           .select(col("doc_id"), tokens(col("text")).as("toks"))
-        // candidate build shared with q82/q84/dedup_scale: one signature
-        // pass, one shuffle of light (band, hash, doc) rows — token arrays
-        // never ride the candidate shuffle (see [[minhashCandidates]])
+        // candidate build shared with q82/q84 (see [[minhashCandidates]])
         val cand = OracleMat(s, "q20_cand")(minhashCandidates(d))
-        // exact Jaccard confirmation over word sets (src/server.ts:24-39):
-        // rejoin the (deduped) token sets only for surviving candidates
-        val sets = OracleMat(s, "q20_sets")(wordSets(d))
+        // the oracle recomputes the confirm from these string word sets
+        // (src/server.ts:24-39); the kernel hashes them
+        val sets = OracleMat(s, "q20_sets")(
+          d.select(col("doc_id"), array_distinct(col("toks")).as("toks")))
         jaccardJoin(cand, sets).orderBy(col("doc_a"), col("doc_b"))
       },
       Some(s"""WITH cand AS (SELECT doc_a, doc_b FROM ${OracleMat.src("q20_cand")}),
-              |sets AS (SELECT doc_id, "set" AS ws FROM ${OracleMat.src("q20_sets")}),
+              |sets AS (SELECT doc_id, toks AS ws FROM ${OracleMat.src("q20_sets")}),
               |scored AS (
               |  SELECT c.doc_a, c.doc_b,
               |         len(list_intersect(sa.ws, sb.ws)) AS inter,

@@ -67,6 +67,29 @@ class DedupStarSpec extends AnyFunSuite {
     ()
   }
 
+  test("confirmJaccard equals a string-set Jaccard reference at the 0.8 boundary") {
+    import spark.implicits._
+    def toks(p: String, n: Int) = (0 until n).map(i => s"$p$i")
+    val t = toks("t", 40)
+    val docs = Seq(
+      1L -> (t ++ toks("a", 5)), 2L -> (t ++ toks("b", 5)),    // 40 of 50: exactly 0.8
+      3L -> (t ++ Seq("a0") ++ toks("c", 6)),                  // 41 of 51 with doc 1: kept
+      4L -> (t ++ toks("d", 6)),                               // 40 of 51 with doc 1: dropped
+      5L -> (t ++ t.take(20) ++ toks("e", 5)),                 // repeated tokens, same set as 6
+      6L -> (t ++ toks("e", 5)),
+      // the loose-template shape: 40 shared of 50, 10 own each (40 of 60)
+      7L -> (toks("u", 40) ++ toks("x", 10)), 8L -> (toks("u", 40) ++ toks("y", 10)))
+    val d = docs.toDF("doc_id", "toks")
+    val pairs = for ((a, ta) <- docs; (b, tb) <- docs if a < b) yield (a, b, ta.toSet, tb.toSet)
+    val cand = pairs.map(p => (p._1, p._2)).toDF("doc_a", "doc_b")
+    val want = pairs.collect { case (a, b, sa, sb)
+      if (sa & sb).size * 10 >= (sa | sb).size * 8 => (a, b) }.toSet
+    val got = DedupQueries.confirmJaccard(d, cand).as[(Long, Long)].collect().toSet
+    assert(got == want)
+    assert(Set((1L, 2L), (1L, 3L), (1L, 5L), (5L, 6L)).subsetOf(got))
+    assert(!got.contains((1L, 4L)) && !got.contains((7L, 8L)))
+  }
+
   test("singleton docs never appear in star edges") {
     val d = corpus(Seq(4), singletons = 8).cache()
     val star = DedupQueries.minhashCandidatesStar(d)

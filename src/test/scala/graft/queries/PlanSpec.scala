@@ -1,6 +1,10 @@
 package graft.queries
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, StringType}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Physical-plan quality gates: the optimizations the 100 TB design relies
@@ -188,5 +192,22 @@ class PlanSpec extends AnyFunSuite {
     assert(exchangeLines.nonEmpty)
     assert(!exchangeLines.exists(_.contains("toks")),
       s"token arrays ride an exchange:\n${exchangeLines.mkString("\n")}")
+  }
+
+  test("confirmJaccard moves no string token sets through any exchange") {
+    val d = spark.read.parquet(s"$sf/documents.parquet")
+      .select(col("doc_id"), split(lower(col("text")), "\\s+").as("toks"))
+    val df = DedupQueries.confirmJaccard(d, DedupQueries.minhashCandidates(d))
+    df.collect()
+    val outputs = new AdaptiveSparkPlanHelper {}.collect(df.queryExecution.executedPlan) {
+      case e: Exchange => e.output
+      case r: ReusedExchangeExec => r.output
+    }
+    assert(outputs.nonEmpty)
+    val strSets = outputs.flatten.filter(_.dataType match {
+      case ArrayType(_: StringType, _) => true
+      case _ => false
+    })
+    assert(strSets.isEmpty, s"string token sets ride an exchange: $strSets")
   }
 }
